@@ -46,55 +46,84 @@ object Dashboard {
     */
   val DefaultSectionCap = 500
 
-  def index(spark: SparkSession, dir: String,
-      sectionCap: Int = DefaultSectionCap): IndexPayload = IndexPayload(
-    slowQueries = Monitoring.slowQueries(spark, dir).limit(sectionCap),
-    idleSessions = Monitoring.idleSessions(spark, dir).limit(sectionCap),
-    blockedSessions = Monitoring.blockedSessions(spark, dir).limit(sectionCap),
-    activeUsers = Monitoring.activeUsers(spark, dir),
-    totalSessions = Monitoring.totalSessions(spark, dir),
-    connectionLoad = Monitoring.connectionLoad(spark, dir),
-    cacheHitRatio = Monitoring.cacheHitRatio(spark, dir),
-    transactionsPerSecond = Monitoring.transactionsPerSecond(spark, dir),
-    topResourceConsumers = Monitoring.topResourceConsumers(spark, dir),
-    tableSizes = Monitoring.tableSizesPretty(spark, dir),
-    backupDelta = Monitoring.lagDelta(spark, dir).limit(sectionCap),
-    usersWithRoles = Monitoring.usersWithRoles(spark, dir).limit(sectionCap),
+  /** One `GET /index/` section, under the name a refresh reports it by:
+    * either a row set built on its own, or one column of
+    * [[Monitoring.indexScalars]], the one-row aggregate the five scalar
+    * panels share.
+    */
+  private sealed trait Section { def name: String }
+  private final case class RowSet(name: String,
+      build: (SparkSession, String, Int) => DataFrame) extends Section
+  private final case class Scalar(name: String, column: String) extends Section
+
+  /** Every index section, in [[IndexPayload]] field order. Row-set
+    * sections are capped to their top-N by their own order (see
+    * [[DefaultSectionCap]]).
+    */
+  private val Sections: Seq[Section] = Seq(
+    RowSet("slow_queries", Monitoring.slowQueries(_, _).limit(_)),
+    RowSet("idle_sessions", Monitoring.idleSessions(_, _).limit(_)),
+    RowSet("blocked_sessions", Monitoring.blockedSessions(_, _).limit(_)),
+    Scalar("active_users", "active_users"),
+    Scalar("total_sessions", "total_sessions"),
+    Scalar("connection_load", "connection_headroom_pct"),
+    Scalar("cache_hit_ratio", "hit_ratio_pct"),
+    Scalar("tps", "tps"),
+    RowSet("top_consumers", (s, d, _) => Monitoring.topResourceConsumers(s, d)),
+    RowSet("table_sizes", (s, d, _) => Monitoring.tableSizesPretty(s, d)),
+    RowSet("backup_delta", Monitoring.lagDelta(_, _).limit(_)),
+    RowSet("users_roles", Monitoring.usersWithRoles(_, _).limit(_)),
     // w14's per-(type, hour) p50/p95/p99 — the latency-band panel class
     // the reference's gauge row approximates with instantaneous values
-    // (index.html:1047-1067); already sorted by (type, hour), so the cap
-    // composes into TakeOrderedAndProject like the other row sections
-    latencyBands = Monitoring.latencyBands(spark, dir).limit(sectionCap),
+    // (index.html:1047-1067)
+    RowSet("latency_bands", Monitoring.latencyBands(_, _).limit(_)),
     // w19's per-(type, hour) excursion envelope — the capacity-review
-    // panel class (candlestick history); sorted by (type, bucket), so
-    // the cap composes into TakeOrderedAndProject like its siblings
-    ohlcBars = Monitoring.ohlcBars(spark, dir).limit(sectionCap))
+    // panel class (candlestick history)
+    RowSet("ohlc_bars", Monitoring.ohlcBars(_, _).limit(_)))
+
+  private val rowSets = Sections.collect { case r: RowSet => r }
+  private val scalarNames = Sections.collect { case s: Scalar => s.name }
+
+  /** One thread per refresh task: each row set, plus the scalars. */
+  private lazy val refreshPool =
+    DriverJobs.daemonPool("graft-dashboard", rowSets.size + 1)
+
+  def index(spark: SparkSession, dir: String,
+      sectionCap: Int = DefaultSectionCap): IndexPayload = {
+    lazy val scalars = Monitoring.indexScalars(spark, dir)
+    Sections.map {
+      case RowSet(_, build) => build(spark, dir, sectionCap)
+      case Scalar(_, column) => scalars.select(column)
+    } match {
+      case Seq(slow, idle, blocked, active, total, load, hit, tps, top, sizes,
+          backup, roles, bands, ohlc) =>
+        IndexPayload(slow, idle, blocked, active, total, load, hit, tps, top,
+          sizes, backup, roles, bands, ohlc)
+    }
+  }
 
   /** Materialize every index section concurrently: the reference issues
     * its ~20 statements sequentially on one cursor (views.py:394-681); as
     * independent Spark jobs they share the scheduler and overlap IO/CPU.
+    * Each task builds its own DataFrame, so plan construction overlaps the
+    * other tasks' jobs instead of running serially before them, and the
+    * five scalar panels come from one collect of their shared aggregate.
     * Returns section name → row count (a serving layer would collect rows).
     */
   def collectIndexConcurrently(spark: SparkSession, dir: String,
       sectionCap: Int = DefaultSectionCap): Map[String, Long] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val p = index(spark, dir, sectionCap)
-    val sections: Seq[(String, DataFrame)] = Seq(
-      "slow_queries" -> p.slowQueries, "idle_sessions" -> p.idleSessions,
-      "blocked_sessions" -> p.blockedSessions, "active_users" -> p.activeUsers,
-      "total_sessions" -> p.totalSessions, "connection_load" -> p.connectionLoad,
-      "cache_hit_ratio" -> p.cacheHitRatio, "tps" -> p.transactionsPerSecond,
-      "top_consumers" -> p.topResourceConsumers, "table_sizes" -> p.tableSizes,
-      "backup_delta" -> p.backupDelta, "users_roles" -> p.usersWithRoles,
-      "latency_bands" -> p.latencyBands, "ohlc_bars" -> p.ohlcBars)
-    val futures = sections.map { case (name, df) =>
-      // collect (not count) so every projected expression actually
-      // materializes — count() lets Catalyst prune the section's columns
-      Future(name -> df.collect().length.toLong)
-    }
-    Await.result(Future.sequence(futures), Duration.Inf).toMap
+    // collect (not count) so every projected expression actually
+    // materializes — count() lets Catalyst prune the section's columns
+    val tasks: Seq[(String, () => Seq[(String, Long)])] =
+      rowSets.map { s =>
+        s.name -> (() =>
+          Seq(s.name -> s.build(spark, dir, sectionCap).collect().length.toLong))
+      } :+ ("scalars" -> (() => {
+        val n = Monitoring.indexScalars(spark, dir).collect().length.toLong
+        scalarNames.map(_ -> n)
+      }))
+    DriverJobs.runAll(spark, refreshPool, "dashboard refresh")(tasks)
+      .flatten.toMap
   }
 
   /** `GET /index_resource/` payload (reference myapp/views.py:756-823):

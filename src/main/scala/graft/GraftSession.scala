@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One session builder for the operational mains (Smoke/Verify/Bench/
-  * Explain/DashboardBench): honors SPARK_GRAFT_CPUS, pins UTC, sizes
+  * Explain) and the benchmark harness, whose dashboard workload
+  * (`python3 perfbench/run.py --workload dashboard`) times the refresh:
+  * honors SPARK_GRAFT_CPUS, pins UTC, sizes
   * shuffle partitions to the core count, and registers the full graft
   * surface — SQL functions AND the optimizer rule — so every main runs
   * (and Explain DISPLAYS) exactly the plans the shipped extensions

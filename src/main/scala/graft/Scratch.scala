@@ -98,9 +98,21 @@ object Scratch {
       srcDir: String): String =
     s"${root(spark)}/$kind/$version/${contentKey(spark, srcDir).take(16)}"
 
+  /** Runs a body at most once to completion; a body that throws leaves
+    * the guard open for the next caller. Concurrent callers wait.
+    */
+  private final class Once {
+    @volatile private var done = false
+    def apply(body: => Unit): Unit =
+      if (!done) synchronized { if (!done) { body; done = true } }
+  }
+
   // one build per destination per JVM; cross-JVM dedup rides the
-  // staging-rename protocol below
-  private val built = new ConcurrentHashMap[String, String]()
+  // staging-rename protocol below. The build runs under its destination's
+  // guard, never inside `computeIfAbsent`: a build may materialize other
+  // artifacts, and a nested `computeIfAbsent` on the same map throws
+  // "Recursive update" when its key lands in the outer key's bin
+  private val built = new ConcurrentHashMap[String, Once]()
 
   /** Materialize `build`'s output at the artifact path exactly once: reuse
     * a COMPLETED build (parquet `_SUCCESS` present), else build into a
@@ -109,13 +121,13 @@ object Scratch {
     * exactly one publishes; the loser deletes its staging and reads the
     * winner's artifact. A destination that exists WITHOUT `_SUCCESS` is a
     * crashed or torn publish — it is renamed aside (see the repair branch)
-    * and replaced by this build, never served. Within one JVM,
-    * `computeIfAbsent` serializes builders outright.
+    * and replaced by this build, never served. Within one JVM, a
+    * per-destination guard serializes builders outright.
     */
   def materialize(spark: SparkSession, kind: String, version: String,
       srcDir: String)(build: String => Unit): String = {
     val dest = artifactPath(spark, kind, version, srcDir)
-    built.computeIfAbsent(dest, _ => {
+    built.computeIfAbsent(dest, _ => new Once).apply {
       ensureRoot(spark)
       val fs = Catalog.fsFor(dest, spark)
       val destPath = new Path(dest)
@@ -186,8 +198,8 @@ object Scratch {
       try fs.setTimes(new Path(dest), System.currentTimeMillis(), -1)
       catch { case scala.util.control.NonFatal(_) => () }
       sweepStale(spark, kind, dest, levels = 2)
-      dest
-    })
+    }
+    dest
   }
 
   /** Default reap age for superseded scratch artifacts (hours); override

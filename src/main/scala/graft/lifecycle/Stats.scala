@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.DriverJobs
+
 /** ANALYZE-equivalent table statistics (SURVEY.md §4; reference maintenance
   * path `VACUUM ANALYZE`, myapp/views.py:887-907).
   *
@@ -20,6 +22,9 @@ import org.apache.spark.sql.types._
   * ANALYZE), and any writer can call [[analyze]] after a batch commit.
   */
 object Stats {
+
+  /** One thread per [[analyze]] pass. */
+  private lazy val pool = DriverJobs.daemonPool("graft-analyze", 2)
 
   /** Where a table's stats dataset lives. */
   def statsPath(tablePath: String): String =
@@ -61,15 +66,12 @@ object Stats {
         count(when(col(c).isNull, lit(1))).as(s"${c}__nulls"))
     }.toSeq
     // the min/max/NDV pass and the hot-key pass are INDEPENDENT scans of
-    // the same table — submit both from futures so the second job's tasks
+    // the same table — run both at once so the second job's tasks
     // back-fill the first job's tail instead of waiting behind it
     // (optimization guide §2.6 "overlap independent jobs"); ANALYZE's
-    // wall cost drops to ~max of the two passes. Job submission from
-    // driver threads is exactly what the Spark scheduler supports.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val rowF = Future { df.agg(aggs.head, aggs.tail: _*).collect()(0) }
+    // wall cost drops to ~max of the two passes. Either pass failing
+    // cancels the other.
+    val statsPass = () => df.agg(aggs.head, aggs.tail: _*).collect()(0)
     // per-column hot-key mass (rows of the single most frequent non-NULL
     // value) — what sizes a salted join's fan-out (Relational.saltsFor).
     // ONE unpivoted two-level aggregation for ALL columns, not a groupBy
@@ -83,9 +85,9 @@ object Stats {
     // and consumers fall back to their default. (An empty table needs no
     // guard: the grouped aggregate over zero rows collects an empty map,
     // exactly what the old rows == 0 branch returned.)
-    val hotF: Future[Map[String, Long]] =
-      if (cols.isEmpty || !withHotKeys) Future.successful(Map.empty)
-      else Future {
+    val hotKeyPass = () =>
+      if (cols.isEmpty || !withHotKeys) Map.empty[String, Long]
+      else {
         // names reach SQL as both a string literal and an identifier —
         // escape each notation's own metacharacters (analyze takes
         // arbitrary parquet; an unescaped backslash would mangle the
@@ -103,9 +105,11 @@ object Stats {
           .groupBy(col("sc")).agg(max(col("n")).as("hot"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       }
-    val row = Await.result(rowF, Duration.Inf)
+    val (row, hotCounts) = DriverJobs.runAll(spark, pool, s"analyze $tablePath")(
+      Seq[(String, () => Any)]("stats" -> statsPass, "hot_keys" -> hotKeyPass)) match {
+      case Seq(r: Row, h: Map[String, Long] @unchecked) => (r, h)
+    }
     val rows = row.getLong(0)
-    val hotCounts: Map[String, Long] = Await.result(hotF, Duration.Inf)
     val fs = graft.Catalog.fsFor(tablePath, spark)
     val sizeBytes = fs.getContentSummary(
       new org.apache.hadoop.fs.Path(tablePath)).getLength

@@ -99,9 +99,12 @@ object Monitoring {
   // A1 — filtered global count (reference myapp/views.py:506-513 — active
   // users with non-null client_addr): distinct users with click activity.
   // ---------------------------------------------------------------------
+  private def activeUserPred: Column =
+    col("props").isNotNull && col("event_type") === "click"
+
   def activeUsers(spark: SparkSession, dir: String): DataFrame =
     Catalog.events(spark, dir)
-      .filter(col("props").isNotNull && col("event_type") === "click")
+      .filter(activeUserPred)
       .agg(countDistinct(col("user_id")).as("active_users"))
 
   val activeUsersSql: String =
@@ -122,10 +125,12 @@ object Monitoring {
   // myapp/views.py:517-520 connection load vs max_connections).
   // 1500 stands in for the max_connections setting lookup.
   // ---------------------------------------------------------------------
+  private def connectionHeadroom: Column =
+    lit(100.0) - count(lit(1)).cast("double") / nullif(lit(1500.0), lit(0.0)) * 100.0
+
   def connectionLoad(spark: SparkSession, dir: String): DataFrame =
     Catalog.events(spark, dir)
-      .agg((lit(100.0) - count(lit(1)).cast("double") /
-        nullif(lit(1500.0), lit(0.0)) * 100.0).as("connection_headroom_pct"))
+      .agg(connectionHeadroom.as("connection_headroom_pct"))
 
   val connectionLoadSql: String =
     "SELECT 100.0 - CAST(count(*) AS DOUBLE) / nullif(1500.0, 0.0) * 100.0 " +
@@ -136,15 +141,17 @@ object Monitoring {
   // cache-hit ratio). Sums run over exact decimals (value is a 2-decimal
   // measure) so both engines produce the identical double at the end.
   // ---------------------------------------------------------------------
-  def cacheHitRatio(spark: SparkSession, dir: String): DataFrame = {
+  private def hitRatio: Column = {
     val v = col("value").cast("decimal(18,2)")
-    Catalog.events(spark, dir)
-      .agg((sum(when(col("event_type") === "click", v)).cast("double") /
-        nullif(
-          (sum(when(col("event_type") === "click", v)) +
-            sum(when(col("event_type") === "view", v))).cast("double"),
-          lit(0.0)) * 100.0).as("hit_ratio_pct"))
+    sum(when(col("event_type") === "click", v)).cast("double") /
+      nullif(
+        (sum(when(col("event_type") === "click", v)) +
+          sum(when(col("event_type") === "view", v))).cast("double"),
+        lit(0.0)) * 100.0
   }
+
+  def cacheHitRatio(spark: SparkSession, dir: String): DataFrame =
+    Catalog.events(spark, dir).agg(hitRatio.as("hit_ratio_pct"))
 
   val cacheHitRatioSql: String =
     "SELECT CAST(sum(CASE WHEN event_type = 'click' THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) / " +
@@ -156,23 +163,40 @@ object Monitoring {
   // A5 — rate over elapsed time with a CASE guard (reference
   // myapp/views.py:551-562 transactions/sec since stats_reset).
   // ---------------------------------------------------------------------
-  def transactionsPerSecond(spark: SparkSession, dir: String): DataFrame = {
-    val elapsed = asOfSec(AsOfEnd) - unix_timestamp(min(col("ts")))
+  private def tpsAggs: Seq[Column] = Seq(
+    count(when(col("event_type").isin("purchase", "error"), lit(1))).as("xacts"),
+    (asOfSec(AsOfEnd) - unix_timestamp(min(col("ts")))).as("elapsed_s"))
+  private def tps: Column =
+    when(col("elapsed_s") > 0,
+      col("xacts").cast("double") / col("elapsed_s").cast("double"))
+      .otherwise(0.0).as("tps")
+
+  def transactionsPerSecond(spark: SparkSession, dir: String): DataFrame =
     Catalog.events(spark, dir)
-      .agg(
-        count(when(col("event_type").isin("purchase", "error"), lit(1))).as("xacts"),
-        elapsed.as("elapsed_s"))
-      .select(
-        when(col("elapsed_s") > 0,
-          col("xacts").cast("double") / col("elapsed_s").cast("double"))
-          .otherwise(0.0).as("tps"))
-  }
+      .agg(tpsAggs.head, tpsAggs.tail: _*)
+      .select(tps)
 
   val transactionsPerSecondSql: String =
     s"""SELECT CASE WHEN elapsed_s > 0 THEN CAST(xacts AS DOUBLE) / CAST(elapsed_s AS DOUBLE) ELSE 0.0 END AS tps FROM (
        | SELECT count(CASE WHEN event_type IN ('purchase','error') THEN 1 END) AS xacts,
        |  CAST(floor(epoch(TIMESTAMP '$AsOfEnd')) AS BIGINT) - CAST(floor(epoch(min(ts))) AS BIGINT) AS elapsed_s
        | FROM events) t""".stripMargin.replace('\n', ' ')
+
+  /** The dashboard's five scalar panels (a1-a5) as ONE aggregate over ONE
+    * `events` scan, one column per panel, each equal to its registered
+    * query's single row. a1's filter becomes a conditional distinct count,
+    * since the other four aggregate every row. Selecting one column prunes
+    * the aggregate down to that panel's expressions.
+    */
+  def indexScalars(spark: SparkSession, dir: String): DataFrame =
+    Catalog.events(spark, dir)
+      .agg(
+        countDistinct(when(activeUserPred, col("user_id"))).as("active_users"),
+        (Seq(count(lit(1)).as("total_sessions"),
+          connectionHeadroom.as("connection_headroom_pct"),
+          hitRatio.as("hit_ratio_pct")) ++ tpsAggs): _*)
+      .select(col("active_users"), col("total_sessions"),
+        col("connection_headroom_pct"), col("hit_ratio_pct"), tps)
 
   // ---------------------------------------------------------------------
   // J1/E2 — chained left-outer dim joins + COALESCE fallback (reference

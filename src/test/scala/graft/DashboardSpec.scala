@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 /** Facade assembly (SURVEY.md §3 traces). */
@@ -23,6 +27,36 @@ class DashboardSpec extends SparkSuite {
     assert(counts.values.forall(_ >= 0L))
   }
 
+  test("every job of one refresh runs under the same job group, described by section") {
+    val (jobs, _) = jobsDuring(Dashboard.collectIndexConcurrently(spark, sfDir))
+    assert(jobs.size >= 10, s"expected a job per refresh task, saw $jobs")
+    val groups = jobs.values.map(_._1).toSet
+    assert(groups.size == 1 && groups.head != null,
+      s"refresh jobs ran under groups $groups")
+    assert(jobs.values.forall(j =>
+      Option(j._2).exists(_.startsWith("dashboard refresh: "))), jobs)
+    assert(jobs.values.map(_._2).toSet.contains("dashboard refresh: top_consumers"))
+  }
+
+  test("a failed section cancels its siblings and is named in the error") {
+    val dir = Files.createTempDirectory("graft-dash-nolineitem")
+    Files.list(Paths.get(sfDir)).iterator().asScala
+      .filterNot(_.getFileName.toString == "lineitem.parquet")
+      .foreach { src =>
+        Files.walk(src).iterator().asScala.foreach { f =>
+          Files.copy(f, dir.resolve(Paths.get(sfDir).relativize(f).toString))
+        }
+      }
+    var err: Throwable = null
+    val (jobs, ended) = jobsDuring {
+      err = intercept[RuntimeException](
+        Dashboard.collectIndexConcurrently(spark, dir.toString))
+    }
+    assert(err.getMessage.contains("top_consumers"), err.getMessage)
+    val live = jobs.keySet -- ended
+    assert(live.isEmpty, s"jobs of the failed refresh still running: $live")
+  }
+
   test("every index section is bounded by the serving cap") {
     val cap = 7
     val counts = Dashboard.collectIndexConcurrently(spark, sfDir, sectionCap = cap)
@@ -35,6 +69,25 @@ class DashboardSpec extends SparkSuite {
     assert(counts("users_roles") == cap)
     assert(counts("latency_bands") == cap)
     assert(counts("ohlc_bars") == cap)
+  }
+
+  test("each fused scalar panel equals its registered query's row") {
+    val p = Dashboard.index(spark, sfDir)
+    Seq(
+      p.activeUsers -> "a1_active_users",
+      p.totalSessions -> "a2_total_sessions",
+      p.connectionLoad -> "a3_connection_load",
+      p.cacheHitRatio -> "a4_cache_hit_ratio",
+      p.transactionsPerSecond -> "a5_tps").foreach { case (panel, q) =>
+      val registered = SparkEntry.queries(q)(spark, sfDir)
+      assert(panel.schema === registered.schema, q)
+      assert(panel.collect().toSeq === registered.collect().toSeq, q)
+    }
+    val scalars = operators.Monitoring.indexScalars(spark, sfDir)
+    val plan = scalars.queryExecution.optimizedPlan
+    assert(plan.collectLeaves().size == 1, s"expected one scan, got:\n$plan")
+    assert(scalars.inputFiles.nonEmpty &&
+      scalars.inputFiles.forall(_.contains("/events.parquet")), plan)
   }
 
   test("latency-bands section serves w14's percentile relation, capped by its own order") {

@@ -47,6 +47,34 @@ class ScratchSpec extends SparkSuite {
     assert(p3 != p1 && builds == 2)
   }
 
+  test("a build may materialize other artifacts, even ones sharing its hash bin") {
+    val src = newCorpus()
+    val outer = Scratch.artifactPath(spark, "spec_outer", "v1", src)
+    // ConcurrentHashMap's bin of a key: its spread hash modulo the table
+    // size (a power of two); inner keys agreeing with the outer key in the
+    // low 16 bits share its bin in every table of up to 65,536 bins
+    def bin(path: String): Int = {
+      val h = path.hashCode
+      (h ^ (h >>> 16)) & 0xffff
+    }
+    val inner = Iterator.from(0).map(i => s"spec_inner_$i")
+      .filter(k => bin(outer.replace("/spec_outer/", s"/$k/")) == bin(outer))
+      .take(3).toList
+    inner.foreach(k => assert(bin(Scratch.artifactPath(spark, k, "v1", src)) == bin(outer)))
+    var innerBuilds = 0
+    val p = Scratch.materialize(spark, "spec_outer", "v1", src) { staging =>
+      inner.foreach { k =>
+        Scratch.materialize(spark, k, "v1", src) { s =>
+          innerBuilds += 1
+          spark.range(1).write.parquet(s)
+        }
+      }
+      spark.range(2).write.parquet(staging)
+    }
+    assert(p == outer && innerBuilds == 3)
+    assert(spark.read.parquet(p).count() == 2)
+  }
+
   test("a pre-existing COMPLETE artifact is reused without rebuilding (cross-JVM path)") {
     // simulate another process having published: complete parquet + _SUCCESS
     // at the artifact path, with this JVM's memo cache cold for the key

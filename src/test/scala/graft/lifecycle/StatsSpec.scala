@@ -31,6 +31,17 @@ class StatsSpec extends SparkSuite {
     assert(key.getLong(6) == 0, "null_count(n_nationkey)")
   }
 
+  test("analyze runs its two passes under one job group, described by pass") {
+    val p = Files.createTempDirectory("graft_stats_group_").toString + "/nation"
+    graft.Catalog.nation(spark, sfDir).write.parquet(p)
+    val (jobs, _) = jobsDuring(Stats.analyze(spark, p))
+    // the stats write runs on the calling thread, outside the group
+    val passes = jobs.values.filter(_._1 != null)
+    assert(passes.map(_._1).toSet.size == 1, s"pass jobs ran under $jobs")
+    assert(passes.map(_._2).toSet == Set(s"analyze $p: stats", s"analyze $p: hot_keys"),
+      s"pass jobs ran under $jobs")
+  }
+
   test("analyze handles a zero-row table (null min/max, count 0)") {
     implicit val s = spark
     val scratch = Files.createTempDirectory("graft_stats_empty_").toString

@@ -113,7 +113,13 @@ class StreamCurationSpec extends SparkSuite {
     // 2.5, not the old 4.0: a concurrently-running full suite holds the
     // 1-min loadavg in the 2.5-5 band and inflated the median past the
     // budget once in a round-14 full run (the test passed alone minutes
-    // later) — at that load the measurement tests the box, not the sink
+    // later) — at that load the measurement tests the box, not the sink.
+    // First wait (bounded, like graft.Bench's load guard) for the box to
+    // quiet down: suites run one at a time, so while this one sleeps the
+    // load the earlier suites left behind decays. Waiting for 2.0 leaves
+    // the waves' own load headroom under the 2.5 gate.
+    val quietBy = System.nanoTime() + 180L * 1000000000L
+    while (load1() >= 2.0 && System.nanoTime() < quietBy) Thread.sleep(5000)
     assume(load1() < 2.5, s"box contended (loadavg ${load1()}) — latency " +
       "measurement would test the box, not the sink")
     val tmp = Files.createTempDirectory("graft-scur-lat").toString
