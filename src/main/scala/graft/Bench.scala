@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.{Files, OpenOption, Paths, StandardOpenOption}
 
+import scala.collection.immutable.ListMap
 
 /** Benchmark main (driver contract): every registered query at the
   * SPARK_GRAFT_SF_DIR scale, one JSON line of per-query wall seconds.
@@ -148,13 +150,12 @@ object Bench {
       val p = java.nio.file.Paths.get("bench_history.jsonl")
       if (!java.nio.file.Files.exists(p)) Map.empty
       else {
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
         val sfCanon = canonSf(sfDir)
         val sameSf = scala.jdk.CollectionConverters.CollectionHasAsScala(
           java.nio.file.Files.readAllLines(p)).asScala
           .filter(_.trim.nonEmpty).flatMap { line =>
             try {
-              val node = mapper.readTree(line)
+              val node = Json.mapper.readTree(line)
               val sfNode = node.get("sf")
               val qs = node.get("queries")
               if (sfNode != null && canonSf(sfNode.asText()) == sfCanon &&
@@ -164,7 +165,7 @@ object Bench {
           }.toSeq
         val acc = scala.collection.mutable.Map.empty[String, Double]
         sameSf.takeRight(HistoryLookback).foreach { qs =>
-          val it = qs.fields()
+          val it = qs.properties().iterator()
           while (it.hasNext) {
             val e = it.next()
             val v = e.getValue.asDouble(Double.NaN)
@@ -178,14 +179,6 @@ object Bench {
         acc.toMap
       }
     } catch { case _: Throwable => Map.empty }
-
-  /** NaN-safe JSON number rendering: a raw Double.NaN interpolation is
-    * not legal JSON — it would invalidate the round artifact AND make
-    * historyRefs' per-line parse discard the whole history entry on every
-    * future run. NaN (loadavg unreadable) renders as null.
-    */
-  private def jsonNum(d: Double): String =
-    if (d.isNaN || d.isInfinite) "null" else d.toString
 
   /** History-anchored outlier threshold: flagged when the sweep median is
     * more than [[HistoryFactor]]x the query's clean history reference AND
@@ -233,6 +226,55 @@ object Bench {
       calibrationOnce(spark)))
   }
 
+  /** The one-line JSON artifact of one sweep. `results` holds each
+    * query's successful repeat timings in sweep order; loadavg and
+    * calibration readings are NaN when unavailable; `outliers` holds each
+    * history outlier's re-measure record. "metric":"total" is the stable
+    * consumer contract; the methodology rides in "method" (renaming the
+    * metric key breaks downstream matchers silently). Queries with zero
+    * successful repeats are omitted from the per-query maps — they appear
+    * only in `failed`. A value in `queries` is the median of exactly
+    * `queries_n[name]` successful repeats, so re-measured queries are
+    * distinguishable in place. `box_calibration_sec` is the MIN of the two
+    * probes: contention can only inflate a probe reading.
+    */
+  private[graft] def render(commit: String, sf: String,
+      results: Seq[(String, Seq[Double])], queryLoad: Map[String, Double],
+      calBefore: Double, calAfter: Double, loadBefore: String,
+      loadAfter: String, loadGuard: String, remeasured: Seq[String],
+      outliers: Seq[(String, ListMap[String, Any])],
+      remeasureFailed: Seq[String], failed: Seq[String],
+      prewarmFailed: Seq[String]): String = {
+    val timed = results.filter(_._2.nonEmpty)
+    def perQuery(f: Seq[Double] => Any) =
+      ListMap.from(timed.map { case (k, ts) => k -> f(ts) })
+    Json.write(ListMap(
+      "metric" -> "total",
+      "method" -> s"median_of_$Repeats",
+      "value" -> timed.map(t => median(t._2)).sum,
+      "unit" -> "sec",
+      "commit" -> commit,
+      "queries" -> perQuery(median),
+      "queries_min" -> perQuery(_.min),
+      "queries_n" -> perQuery(_.size),
+      "queries_load" -> ListMap.from(timed.map { case (k, _) =>
+        k -> Json.num(queryLoad.getOrElse(k, Double.NaN)) }),
+      "total_min" -> timed.map(_._2.min).sum,
+      "repeats" -> Repeats,
+      "calibration_before_sec" -> Json.num(calBefore),
+      "calibration_after_sec" -> Json.num(calAfter),
+      "box_calibration_sec" -> Json.num(math.min(calBefore, calAfter)),
+      "loadavg_before" -> loadBefore,
+      "loadavg_after" -> loadAfter,
+      "load_guard" -> loadGuard,
+      "remeasured" -> remeasured,
+      "history_outliers" -> ListMap.from(outliers),
+      "remeasure_failed" -> remeasureFailed,
+      "failed" -> failed,
+      "prewarm_failed" -> prewarmFailed,
+      "sf" -> sf))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // the guard runs BEFORE the session spins up: our own executor
@@ -252,31 +294,11 @@ object Bench {
       Catalog.table(spark, sfDir, t)
         .write.format("noop").mode("overwrite").save()
     }
-    // pre-build the shared persisted feature indexes: queries measure
-    // steady-state cost; the one-time offline build is pipeline setup
-    try { operators.Dedup.prewarmIndexes(spark, sfDir)
-          operators.Similarity.prewarmIndexes(spark, sfDir)
-          operators.Search.prewarmIndexes(spark, sfDir)
-          operators.Multimodal.prewarmIndexes(spark, sfDir)
-          operators.Graph.prewarmIndexes(spark, sfDir)
-          operators.Profile.prewarmIndexes(spark, sfDir)
-          operators.TextOps.prewarmIndexes(spark, sfDir) }
-    catch { case _: Throwable => () }
-    // iteration aid: SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run to the
-    // named queries (full run when unset — the driver contract). Unknown
-    // names abort: a typo would otherwise bench nothing and print a
-    // plausible near-zero total with exit code 0
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.mkString(", ")}")
-    }
-    // pre-sweep box probe (full runs only — a BENCH_ONLY iteration loop
-    // should stay ~1 min and writes no round artifact anyway)
-    val isFull = only.isEmpty
-    val calBefore = if (isFull) calibrationProbe(spark) else Double.NaN
+    // queries measure steady-state cost; the one-time index build is
+    // pipeline setup. A failed module is named in `prewarm_failed`: its
+    // build cost moves into the timed queries that read it
+    val prewarmFailed = SparkEntry.prewarm(spark, sfDir)
+    val calBefore = calibrationProbe(spark)
     val failed = scala.collection.mutable.ListBuffer.empty[String]
     val remeasured = scala.collection.mutable.ListBuffer.empty[String]
     // re-measure crashes are tracked APART from base failures: a query with
@@ -289,7 +311,6 @@ object Bench {
     // reconstruct from cross-session re-runs
     val qLoad = scala.collection.mutable.Map.empty[String, Double]
     val allQueries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     // only SUCCESSFUL repeats contribute timings: a fast-crashing repeat
     // would otherwise drag the median/min toward its time-to-failure and
     // make a broken query read as a fast one (ADVICE r5)
@@ -343,19 +364,18 @@ object Bench {
     // query, so the artifact adjudicates itself instead of needing a
     // judge to diff it against history.
     // ------------------------------------------------------------------
-    val refs = if (only.isEmpty) historyRefs(sfDir) else Map.empty[String, Double]
-    // the anchor must be distinguishable from "never engaged": a full run
-    // with history on disk but zero usable refs is a configuration bug
-    // (sf-dir spelling, corrupt file), not a clean bill of health
-    if (only.isEmpty) {
-      System.err.println(s"[bench] history anchor: ${refs.size} query refs " +
-        s"loaded for $sfDir")
-      if (refs.isEmpty &&
-          java.nio.file.Files.exists(java.nio.file.Paths.get("bench_history.jsonl")))
-        System.err.println("[bench] WARNING: bench_history.jsonl exists but " +
-          "yielded no same-sf refs — the history anchor is NOT engaged")
-    }
-    val outlierLog = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val refs = historyRefs(sfDir)
+    // the anchor must be distinguishable from "never engaged": a run with
+    // history on disk but zero usable refs is a configuration bug (sf-dir
+    // spelling, corrupt file), not a clean bill of health
+    System.err.println(s"[bench] history anchor: ${refs.size} query refs " +
+      s"loaded for $sfDir")
+    if (refs.isEmpty &&
+        java.nio.file.Files.exists(java.nio.file.Paths.get("bench_history.jsonl")))
+      System.err.println("[bench] WARNING: bench_history.jsonl exists but " +
+        "yielded no same-sf refs — the history anchor is NOT engaged")
+    val outliers =
+      scala.collection.mutable.LinkedHashMap.empty[String, ListMap[String, Any]]
     val flagged = results.toSeq.collect {
       case (name, ts) if ts.nonEmpty && refs.get(name).exists(r =>
         median(ts) > HistoryFactor * r && median(ts) > HistoryFloorSec) => name
@@ -371,81 +391,41 @@ object Bench {
       results(name) = after
       val loadNow = loadavg1() // ONE reading for both records — the two
       qLoad(name) = loadNow    // fields must never contradict each other
-      outlierLog(name) = f"""{"median_initial":${median(before)},""" +
-        f""""history_ref":$ref,"median_final":${median(after)},""" +
-        s""""loadavg_after":${jsonNum(loadNow)},"extra_repeats":${extra.size}}"""
+      outliers(name) = ListMap("median_initial" -> median(before),
+        "history_ref" -> ref, "median_final" -> median(after),
+        "loadavg_after" -> Json.num(loadNow), "extra_repeats" -> extra.size)
       if (!remeasured.contains(name)) remeasured += name
     }
     // loadavg_after is adjudication evidence for the SWEEP — capture it
     // BEFORE the post-sweep probe, whose own 32-way burst would inflate
     // the 1-min EMA by ~1.6 against a 1.5 guard scale (round-14 review)
     val loadAfter = loadavg()
-    // post-sweep box probe: the min of the two probes is the session's
-    // box speed (contention can only inflate a probe reading)
-    val calAfter = if (isFull) calibrationProbe(spark) else Double.NaN
-    val boxCal =
-      if (calBefore.isNaN || calAfter.isNaN) Double.NaN
-      else math.min(calBefore, calAfter)
-    // queries with zero successful repeats are omitted from the per-query
-    // maps entirely — they appear only in `failed`
-    val timed = results.toSeq.collect { case (k, ts) if ts.nonEmpty =>
-      (k, median(ts), ts.min, ts.size)
-    }
-    val qs = timed.map { case (k, med, _, _) => "\"" + k + "\":" + med }
-      .mkString("{", ",", "}")
-    val qsMin = timed.map { case (k, _, mn, _) => "\"" + k + "\":" + mn }
-      .mkString("{", ",", "}")
-    // per-query sample counts (ADVICE r12): a value in `queries` is the
-    // median of exactly queries_n[name] successful repeats — re-measured
-    // queries are distinguishable in place, not via a side list
-    val qsN = timed.map { case (k, _, _, n) => "\"" + k + "\":" + n }
-      .mkString("{", ",", "}")
-    val qsLoad = timed.map { case (k, _, _, _) =>
-      "\"" + k + "\":" + jsonNum(qLoad.getOrElse(k, Double.NaN)) }
-      .mkString("{", ",", "}")
-    val outliersJson = outlierLog.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = timed.map(_._2).sum
-    val totalMin = timed.map(_._3).sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val remeasuredJson = remeasured.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val remeasureFailedJson =
-      remeasureFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // "metric":"total" is the stable consumer contract; the methodology
-    // rides in "method" (ADVICE r5: renaming the metric key breaks
-    // downstream matchers silently)
+    val calAfter = calibrationProbe(spark)
     val sha = gitHead()
-    // "remeasure_extra_repeats" is DEPRECATED (ADVICE r13: the r13
-    // artifact dropped it silently): superseded by the per-query
-    // `queries_n` map, re-emitted for one round so any matcher still
-    // reading it keeps working — remove after r14
-    val json = s"""{"metric":"total","method":"median_of_$Repeats","value":$total,"unit":"sec","commit":"$sha","queries":$qs,"queries_min":$qsMin,"queries_n":$qsN,"queries_load":$qsLoad,"total_min":$totalMin,"repeats":$Repeats,"remeasure_extra_repeats":2,"calibration_before_sec":${jsonNum(calBefore)},"calibration_after_sec":${jsonNum(calAfter)},"box_calibration_sec":${jsonNum(boxCal)},"loadavg_before":"$loadBefore","loadavg_after":"$loadAfter","load_guard":"$loadGuard","remeasured":$remeasuredJson,"history_outliers":$outliersJson,"remeasure_failed":$remeasureFailedJson,"failed":$failedJson,"sf":"$sfDir"}"""
+    val json = render(sha, sfDir, results.toSeq, qLoad.toMap, calBefore,
+      calAfter, loadBefore, loadAfter, loadGuard, remeasured.toList,
+      outliers.toSeq, remeasureFailed.toList, failed.toList, prewarmFailed)
     println(json)
-    // FULL runs also persist to files (a BENCH_ONLY iteration run must
-    // not clobber the round artifact with a 2-query slice):
+    // the line also persists to files:
     // - bench_local.json: the driver captures only the last ~2 KB of
     //   stdout, which truncated 38 of 98 per-query timings out of
     //   BENCH_r09.json — a file survives regardless of capture policy
+    // - bench_history.jsonl, append-only: box-to-box noise claims (±20%
+    //   totals / ±40% per-query medians) are checkable only against
+    //   REPEATED full runs on record
     // - leakcheck_meta.json (ADVICE r9): this main runs on the round's
     //   final commit, so the SHA names the tree any same-round
     //   LEAKCHECK/COPYCHECK scan saw
-    if (only.isEmpty) {
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_local.json"), json + "\n")
-      catch { case e: Throwable => System.err.println(s"[bench] could not write bench_local.json: ${e.getMessage}") }
-      // append-only history (round-10 verdict item #3): box-to-box noise
-      // claims (±20% totals / ±40% per-query medians) are checkable only
-      // against REPEATED full runs on record — bench_local.json alone
-      // keeps just the newest
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_history.jsonl"),
-        (json + "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-      catch { case e: Throwable => System.err.println(s"[bench] could not append bench_history.jsonl: ${e.getMessage}") }
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get("leakcheck_meta.json"),
-        s"""{"commit":"$sha","written_by":"graft.Bench","written_at":"${java.time.Instant.now()}"}\n""")
-      catch { case e: Throwable => System.err.println(s"[bench] could not write leakcheck_meta.json: ${e.getMessage}") }
-    }
+    def persist(file: String, line: String, opts: OpenOption*): Unit =
+      try Files.writeString(Paths.get(file), line + "\n", opts: _*)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write $file: ${e.getMessage}") }
+    persist("bench_local.json", json)
+    persist("bench_history.jsonl", json, StandardOpenOption.CREATE,
+      StandardOpenOption.APPEND)
+    persist("leakcheck_meta.json", Json.write(ListMap("commit" -> sha,
+      "written_by" -> "graft.Bench",
+      "written_at" -> java.time.Instant.now().toString)))
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One session builder for the operational mains (Smoke/Verify/Bench/
-  * Explain) and the benchmark harness, whose dashboard workload
+  * Inspect) and the benchmark harness, whose dashboard workload
   * (`python3 perfbench/run.py --workload dashboard`) times the refresh:
   * honors SPARK_GRAFT_CPUS, pins UTC, sizes
   * shuffle partitions to the core count, and registers the full graft
   * surface — SQL functions AND the optimizer rule — so every main runs
-  * (and Explain DISPLAYS) exactly the plans the shipped extensions
+  * (and Inspect DISPLAYS) exactly the plans the shipped extensions
   * produce. Previously each main re-spelled this with drifting defaults
   * and none registered the extensions, leaving the latest-per-key rewrite
   * invisible to the documented explain-and-iterate loop.

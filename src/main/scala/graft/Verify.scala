@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.collection.immutable.ListMap
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -39,26 +42,19 @@ object Verify {
           new org.apache.hadoop.fs.Path(s"$outDir/$name"), true)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      // oracles over parquet FILE METADATA (c10) need a literal path —
-      // table functions can't read the registered views — so the dump
-      // binds the run's fixture dir into the documented token
-      .map { case (k, v) => k -> v.replace("__SF_DIR__", sfDir) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(
+      SparkEntry.oracleSql.filter { case (k, _) => only.forall(_.contains(k)) },
+      sfDir))
     spark.stop()
   }
+
+  /** `oracle_sql.json`: query name → DuckDB SQL, in name order. Oracles
+    * over parquet FILE METADATA (c10) need a literal path — table
+    * functions can't read the registered views — so the run's fixture dir
+    * is bound into the documented `__SF_DIR__` token.
+    */
+  private[graft] def oracleJson(oracleSql: Map[String, String],
+      sfDir: String): String =
+    Json.write(ListMap.from(oracleSql.toSeq.sortBy(_._1).map {
+      case (k, v) => k -> v.replace("__SF_DIR__", sfDir) }))
 }

@@ -1,11 +1,14 @@
 #!/bin/bash
-# The whole round gate in one shot: compile, tests, oracle verify, bench,
-# the benchmark's unit tests and one short checked dashboard run.
+# The whole gate in one shot: compile, tests, every registered plan,
+# oracle verify, bench, the benchmark's unit tests and one short checked
+# dashboard run.
 # Usage: tools/full_check.sh  (from /root/repo)
 set -eo pipefail
 cd "$(dirname "$0")/.."
 echo "== compile"; sbt -batch compile | tail -1
 echo "== test";    sbt -batch test 2>&1 | grep -E "Tests:|All tests" | tail -2
+echo "== plans: every registered query's plan builds (count printed)"
+tools/run.sh graft.Inspect plan /root/testdata/sf0.001 all 2>/dev/null | grep -c "^===== "
 echo "== verify sf0.01 vs DuckDB oracle"
 SPARK_GRAFT_CPUS=16 tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/graft_verify 2>/dev/null | tail -2
 python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/graft_verify | tail -3
