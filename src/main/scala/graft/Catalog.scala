@@ -41,69 +41,55 @@ object Catalog {
       case "events"     => events(spark, dir)
       case "documents"  => documents(spark, dir)
       case "embeddings" => embeddings(spark, dir)
-      case other        => readStable(spark, path(dir, other))
+      case other        => read(spark, path(dir, other))
     }
 
-  /** Schema-pinned parquet read for IMMUTABLE relations — the fixture
-    * tables and the content-keyed [[Scratch]] artifacts. A bare
-    * `spark.read.parquet(p)` runs a footer-inference Spark JOB on every
-    * call (~60–130 ms of scheduling + listing at local scale), and the
-    * iterative operators (the k-family supersteps) and the fd family's
-    * per-table artifact serves issue DOZENS of such reads per query —
-    * measured on k1: 16 of its 27 jobs were footer reads (optimization
-    * guide §5 "the driver should do almost no data work"). The schema of
-    * these paths cannot change within a JVM (fixtures are the driver's
-    * read-only inputs; artifact paths embed a content fingerprint +
-    * builder version), so we infer it ONCE per path and serve every
-    * subsequent read with the schema provided — zero jobs, and each call
-    * still gets a fresh DataFrame (fresh attribute ids — the iterative
-    * thunk contract is untouched). MUTABLE engine-written tables
-    * (Lifecycle/Stats/Streams paths, whose schemas legitimately evolve
-    * mid-run) keep the bare per-call read.
-    */
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
     String, org.apache.spark.sql.types.StructType]()
 
-  private[graft] def readStable(spark: SparkSession, p: String): DataFrame = {
-    val s = schemaMemo.computeIfAbsent(p, _ => spark.read.parquet(p).schema)
+  /** The schema registry: one pinned schema per parquet path. A bare
+    * `spark.read.parquet(p)` runs a footer-inference Spark JOB on every
+    * call (~60–130 ms of scheduling + listing at local scale), and the
+    * iterative operators (the k-family supersteps), the fd family's
+    * per-table artifact serves and the lifecycle pipelines' re-reads
+    * issue DOZENS of such reads per query — measured on k1: 16 of its 27
+    * jobs were footer reads; on s15: ~9 zero-record "parquet at" jobs.
+    * [[read]] infers a path's schema ONCE and serves every later read
+    * with it: zero jobs, and each call still gets a fresh DataFrame
+    * (fresh attribute ids — the iterative thunk contract is untouched).
+    * Only the schema is pinned; the file listing is taken per read, so
+    * appended rows are always seen.
+    *
+    * Invalidation is explicit, never by filesystem timing: [[invalidate]]
+    * is the only thing that removes an entry. The engine's write
+    * primitives call it AFTER their commit (the rename or the append):
+    * `Lifecycle.rewriteAt` (delete, update, truncate, compact, MERGE),
+    * `Lifecycle.append`, `upsert`, `archive`, `restoreOlderThan` and
+    * `Stats.analyze`. An inference racing a commit cannot outlive it:
+    * `remove` waits for an in-flight `computeIfAbsent` on the same key.
+    *
+    * CONTRACT: a writer outside the engine that changes the schema of a
+    * path read here calls [[invalidate]] after its commit; until then
+    * reads keep the old schema, and a new column is silently dropped.
+    *
+    * Reads that need no invalidation, because their schema cannot change
+    * under a reader: the read-only fixture tables, content-keyed
+    * [[Scratch]] artifacts (the path embeds a content fingerprint and the
+    * artifact's version), `Versioned` tables (read through their manifest
+    * schema, not here) and first writes into a fresh run dir (no read
+    * precedes them). Partitioned dirs are not served here; see
+    * [[readPartitioned]].
+    *
+    * A missing or unreadable path throws what `spark.read.parquet` throws,
+    * and a failed inference is never memoized.
+    */
+  def read(spark: SparkSession, p: String): DataFrame = {
+    val s = schemas.computeIfAbsent(p, _ => spark.read.parquet(p).schema)
     spark.read.schema(s).parquet(p)
   }
 
-  /** [[readStable]]'s sibling for ENGINE-WRITTEN (mutable) flat tables —
-    * the lifecycle pipelines re-read their run-dir tables after every
-    * mutation step, paying the same footer-inference job each time (s15
-    * measured ~9 zero-record "parquet at" jobs of 20-80 ms each). Here
-    * the schema CAN change mid-run (archive adds a column), so the memo
-    * is keyed by the table dir's MODIFICATION TIME: every write path
-    * (staged-swap rename, append's new part file, overwrite's dir
-    * re-create) creates or renames entries in the dir and bumps its
-    * mtime, invalidating the entry — schema evolution is picked up,
-    * back-to-back reads of an unchanged table skip the job. Any stat
-    * failure falls back to the bare read so error behavior (missing
-    * path etc.) is unchanged. Not for partitioned dirs (partition-column
-    * inference has its own rules) — their read sites stay bare.
-    */
-  private val mutableSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, org.apache.spark.sql.types.StructType)]()
-
-  private[graft] def readCurrent(spark: SparkSession, p: String): DataFrame = {
-    val mtime =
-      try fsFor(p, spark)
-        .getFileStatus(new org.apache.hadoop.fs.Path(p)).getModificationTime
-      catch { case scala.util.control.NonFatal(_) => -1L }
-    if (mtime < 0) spark.read.parquet(p)
-    else {
-      val cached = mutableSchemaMemo.get(p)
-      val s =
-        if (cached != null && cached._1 == mtime) cached._2
-        else {
-          val inferred = spark.read.parquet(p).schema
-          mutableSchemaMemo.put(p, (mtime, inferred))
-          inferred
-        }
-      spark.read.schema(s).parquet(p)
-    }
-  }
+  /** Drop `p`'s pinned schema; the next [[read]] infers it again. */
+  def invalidate(p: String): Unit = schemas.remove(p)
 
   /** The events (metric stream) table.
     *
@@ -130,7 +116,7 @@ object Catalog {
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = readStable(spark, path(dir, "events"))
+    val raw = read(spark, path(dir, "events"))
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
@@ -160,13 +146,6 @@ object Catalog {
             s"observed physical schema:\n$physical", e)
       }
     }
-
-  /** ANALYZE-style persisted statistics for an engine-written table
-    * (SURVEY.md §4; computed by [[graft.lifecycle.Stats.analyze]], refreshed
-    * by `Lifecycle.compact` — the VACUUM ANALYZE path). None until analyzed.
-    */
-  def tableStats(spark: SparkSession, tablePath: String): Option[DataFrame] =
-    graft.lifecycle.Stats.read(spark, tablePath)
 
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "nation")
@@ -222,7 +201,7 @@ object Catalog {
     */
   def documents(spark: SparkSession, dir: String): DataFrame =
     widenToLong(
-      requireColumns(readStable(spark, path(dir, "documents")),
+      requireColumns(read(spark, path(dir, "documents")),
         "documents", Seq("doc_id", "text"), path(dir, "documents")),
       Seq("doc_id", "n_chars"))
 
@@ -237,7 +216,7 @@ object Catalog {
   def embeddings(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val raw = widenToLong(
-      requireColumns(readStable(spark, path(dir, "embeddings")),
+      requireColumns(read(spark, path(dir, "embeddings")),
         "embeddings", Seq("vec_id", "embedding"), path(dir, "embeddings")),
       Seq("vec_id"))
     raw.schema("embedding").dataType match {
@@ -268,7 +247,11 @@ object Catalog {
       .repartition(col("dt")) // one shuffle → one writer wave per day
       .write.partitionBy("dt").mode("overwrite").parquet(path)
 
-  /** Read a date-partitioned table; `dt` filters prune partitions. */
+  /** Read a date-partitioned table; `dt` filters prune partitions. Not
+    * served by the schema registry: partition-column inference has its
+    * own rules, and the pinned-schema variant measured 1.7× slower on
+    * s10 (VERDICT r16), so every call lists and infers afresh.
+    */
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 

@@ -25,17 +25,19 @@ import graft.Catalog
 object Lifecycle {
 
   /** S7 — plain append. */
-  def append(table: DataFrame, path: String): Unit =
+  def append(table: DataFrame, path: String): Unit = {
     table.write.mode(SaveMode.Append).parquet(path)
+    Catalog.invalidate(path)
+  }
 
   /** S9 — idempotent upsert: insert only rows whose key is absent
     * (`ON CONFLICT DO NOTHING`). One shuffle on the key.
     */
   def upsert(existingPath: String, delta: DataFrame, keys: Seq[String])(
       implicit spark: SparkSession): Unit = {
-    val existing = Catalog.readCurrent(spark, existingPath)
-    val fresh = delta.join(existing.select(keys.map(col): _*), keys, "left_anti")
-    fresh.write.mode(SaveMode.Append).parquet(existingPath)
+    val existing = Catalog.read(spark, existingPath)
+    append(delta.join(existing.select(keys.map(col): _*), keys, "left_anti"),
+      existingPath)
   }
 
   /** S10 — DELETE WHERE pred: rewrite keeping the complement. SQL DELETE
@@ -44,7 +46,7 @@ object Lifecycle {
     */
   def delete(path: String, pred: org.apache.spark.sql.Column)(
       implicit spark: SparkSession): Unit =
-    rewrite(path)(_.filter(!coalesce(pred, lit(false))))
+    rewriteAt(path)(_.filter(!coalesce(pred, lit(false))))
 
   /** S11 — UPDATE SET col = value WHERE pred. */
   def update(path: String, column: String, value: org.apache.spark.sql.Column,
@@ -67,7 +69,7 @@ object Lifecycle {
     val dup = sets.map(_._1).combinations(2)
       .collectFirst { case Seq(a, b) if resolver(a, b) => a }
     require(dup.isEmpty, s"duplicate UPDATE SET target: ${dup.get}")
-    rewrite(path) { df =>
+    rewriteAt(path) { df =>
       val unknown = sets.map(_._1).filterNot(s => df.columns.exists(resolver(s, _)))
       require(unknown.isEmpty,
         s"UPDATE references non-existent column(s): ${unknown.mkString(", ")}")
@@ -85,9 +87,9 @@ object Lifecycle {
     */
   def archive(livePath: String, archivePath: String, asOf: String)(
       implicit spark: SparkSession): Unit = {
-    val live = Catalog.readCurrent(spark, livePath)
-    live.withColumn("archive_ts", lit(asOf).cast("timestamp"))
-      .write.mode(SaveMode.Append).parquet(archivePath)
+    val live = Catalog.read(spark, livePath)
+    append(live.withColumn("archive_ts", lit(asOf).cast("timestamp")),
+      archivePath)
     truncate(livePath)
   }
 
@@ -96,40 +98,26 @@ object Lifecycle {
     */
   def restoreOlderThan(livePath: String, archivePath: String, cutoff: String)(
       implicit spark: SparkSession): Unit = {
-    val arch = Catalog.readCurrent(spark, archivePath)
+    val arch = Catalog.read(spark, archivePath)
     val toRestore = arch.filter(col("archive_ts") < lit(cutoff).cast("timestamp"))
-    toRestore.drop("archive_ts")
-      .write.mode(SaveMode.Append).parquet(livePath)
+    append(toRestore.drop("archive_ts"), livePath)
     rewriteAt(archivePath)(
       _.filter(col("archive_ts") >= lit(cutoff).cast("timestamp")))
   }
 
   /** S14 — TRUNCATE: overwrite with the empty relation, schema kept. */
   def truncate(path: String)(implicit spark: SparkSession): Unit =
-    rewrite(path)(df => df.limit(0))
+    rewriteAt(path)(df => df.limit(0))
 
   /** S16 — compaction + stats refresh (the full `VACUUM ANALYZE` analogue,
     * reference myapp/views.py:887-907): rewrite to k output files, then
     * recompute and persist table statistics ([[Stats.analyze]]).
     */
   def compact(path: String, numFiles: Int)(implicit spark: SparkSession): Unit = {
-    rewrite(path)(_.repartition(numFiles))
+    rewriteAt(path)(_.repartition(numFiles))
     Stats.analyze(spark, path)
     ()
   }
-
-  /** Rewrite-on-write with a staging copy (parquet can't be read and
-    * overwritten in one job): transform → stage → swap.
-    */
-  private def rewrite(path: String)(f: DataFrame => DataFrame)(
-      implicit spark: SparkSession): Unit = rewriteAt(path)(f)
-
-  /** The rewrite-on-write protocol for sibling statement executors
-    * ([[SqlMutations]]'s MERGE): same staged-write + move-aside swap as
-    * every DELETE/UPDATE here.
-    */
-  private[lifecycle] def rewriteTable(path: String)(f: DataFrame => DataFrame)(
-      implicit spark: SparkSession): Unit = rewriteAt(path)(f)
 
   /** Unique per-call scratch suffix: two concurrent rewrites of the SAME
     * table must not share staged/backup roots — with a fixed name, writer
@@ -139,12 +127,18 @@ object Lifecycle {
   private def scratchSuffix(): String =
     "-" + java.util.UUID.randomUUID().toString
 
-  private def rewriteAt(path: String)(f: DataFrame => DataFrame)(
+  /** Rewrite-on-write with a staging copy (parquet can't be read and
+    * overwritten in one job): transform → stage → swap, then drop the
+    * path's pinned schema. The one rewrite protocol: DELETE, UPDATE,
+    * TRUNCATE, compaction, the rollup refresh and [[SqlMutations]]'s
+    * MERGE all run through it.
+    */
+  private[lifecycle] def rewriteAt(path: String)(f: DataFrame => DataFrame)(
       implicit spark: SparkSession): Unit = {
     val sfx = scratchSuffix()
     val staged = path.stripSuffix("/") + ".staged" + sfx
     val backup = path.stripSuffix("/") + ".bak" + sfx
-    f(Catalog.readCurrent(spark, path)).write.mode(SaveMode.Overwrite).parquet(staged)
+    f(Catalog.read(spark, path)).write.mode(SaveMode.Overwrite).parquet(staged)
     val fs = Catalog.fsFor(path, spark)
     val dst = new org.apache.hadoop.fs.Path(path)
     val stagedP = new org.apache.hadoop.fs.Path(staged)
@@ -157,6 +151,7 @@ object Lifecycle {
       fs.rename(backupP, dst) // restore on failed promote
       throw new java.io.IOException(s"rewrite of $path failed to promote staged data")
     }
+    Catalog.invalidate(path)
     fs.delete(backupP, true)
   }
 
@@ -189,7 +184,7 @@ object Lifecycle {
     val sfx = scratchSuffix()
     val staged = base + ".staged" + sfx
     val bakRoot = base + ".bak" + sfx
-    val slice = spark.read.parquet(path)
+    val slice = Catalog.readPartitioned(spark, path)
       .filter(col(partCol).isin(affected: _*))
     f(slice).write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(staged)
     val fs = Catalog.fsFor(path, spark)
@@ -239,7 +234,7 @@ object Lifecycle {
       pred: org.apache.spark.sql.Column)(
       implicit spark: SparkSession): Seq[Any] =
     if (!hasDataFiles(path)) Seq.empty
-    else spark.read.parquet(path).filter(pred)
+    else Catalog.readPartitioned(spark, path).filter(pred)
       .select(col(partCol)).distinct().collect().map(_.get(0)).toSeq
 
   /** S10, partition-local: DELETE WHERE pred rewriting only hit partitions. */
@@ -282,7 +277,7 @@ object Lifecycle {
           if (realParts.nonEmpty) col(partCol).isin(realParts: _*) else lit(false)
         val partPred =
           if (nullParts.nonEmpty) inReal || col(partCol).isNull else inReal
-        val existing = spark.read.parquet(existingPath).filter(partPred)
+        val existing = Catalog.readPartitioned(spark, existingPath).filter(partPred)
         delta.join(existing.select(keys.map(col): _*), keys, "left_anti")
       }
     fresh.write.mode(SaveMode.Append).partitionBy(partCol).parquet(existingPath)
@@ -312,7 +307,7 @@ object Lifecycle {
     delete(events, col("event_type") === "click")
     // S11: zero the value of view events
     update(events, "value", lit(0.0), col("event_type") === "view")
-    Catalog.readCurrent(spark, events)
+    Catalog.read(spark, events)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .orderBy(col("event_id"))
   }
@@ -342,7 +337,7 @@ object Lifecycle {
     // S16 on the emptied live table is a no-op; compact the archive
     compact(arch, 4)
     restoreOlderThan(live, arch, "2024-03-01 00:00:00")
-    Catalog.readCurrent(spark, live)
+    Catalog.read(spark, live)
       .select(col("event_id"), col("event_type"), col("value"))
       .orderBy(col("event_id"))
   }
@@ -377,7 +372,7 @@ object Lifecycle {
     upsertPartitioned(path, delta, Seq("event_id"), "dt")
     upsertPartitioned(path, delta, Seq("event_id"), "dt") // idempotent
     val out =
-      if (hasDataFiles(path)) spark.read.parquet(path)
+      if (hasDataFiles(path)) Catalog.readPartitioned(spark, path)
       else Catalog.events(spark, dir).limit(0) // empty source → empty table
     out.select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .orderBy(col("event_id"))
@@ -489,7 +484,7 @@ object Lifecycle {
     */
   def refreshRollup(rollupPath: String, delta: DataFrame)(
       implicit spark: SparkSession): Unit =
-    rewrite(rollupPath) { cur =>
+    rewriteAt(rollupPath) { cur =>
       cur.unionByName(dayTypeRollupFor(delta))
         .groupBy(col("day"), col("event_type"))
         .agg(sum(col("n")).as("n"),
@@ -504,7 +499,7 @@ object Lifecycle {
     val ev = Catalog.events(spark, dir)
     dayTypeRollupFor(ev.filter(col("ts") < cutover)).write.parquet(rollup)
     refreshRollup(rollup, ev.filter(col("ts") >= cutover))
-    Catalog.readCurrent(spark, rollup)
+    Catalog.read(spark, rollup)
       .select(col("day"), col("event_type"), col("n"),
         col("sum_value_dec").cast("double").as("sum_value"))
       .orderBy(col("day"), col("event_type"))

@@ -116,10 +116,10 @@ object SqlMutations {
       "WHEN NOT MATCHED BY SOURCE is not supported by the mutation surface")
     val (tName, tAlias) = nameAndAlias(m.targetTable)
     val (sName, sAlias) = nameAndAlias(m.sourceTable)
-    val source = graft.Catalog.readCurrent(spark, tables(sName))
+    val source = graft.Catalog.read(spark, tables(sName))
     val resolver = spark.sessionState.analyzer.resolver
 
-    Lifecycle.rewriteTable(tables(tName)) { target =>
+    Lifecycle.rewriteAt(tables(tName)) { target =>
       val tCols = target.columns.toSeq
       val joined = target.withColumn("__t", lit(1))
         .withColumn("__tid", monotonically_increasing_id()).alias(tAlias)
@@ -208,7 +208,7 @@ object SqlMutations {
     execute(spark,
       "UPDATE events SET value = 0.0, user_id = user_id + 1000000 " +
         "WHERE event_type = 'view'", tables)
-    graft.Catalog.readCurrent(spark, events)
+    graft.Catalog.read(spark, events)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .orderBy(col("event_id"))
   }
@@ -253,7 +253,7 @@ object SqlMutations {
         |WHEN MATCHED AND s.value > 250 THEN DELETE
         |WHEN MATCHED THEN UPDATE SET value = s.value, event_type = 'adjusted'
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin, tables)
-    graft.Catalog.readCurrent(spark, events)
+    graft.Catalog.read(spark, events)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .orderBy(col("event_id"))
   }

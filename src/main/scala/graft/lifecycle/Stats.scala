@@ -56,7 +56,7 @@ object Stats {
     */
   def analyze(spark: SparkSession, tablePath: String,
       withHotKeys: Boolean = true): DataFrame = {
-    val df = graft.Catalog.readCurrent(spark, tablePath)
+    val df = graft.Catalog.read(spark, tablePath)
     val cols = df.schema.fields.filter(f => isAtomic(f.dataType)).map(_.name)
     val aggs = count(lit(1)).as("_rows") +: cols.flatMap { c =>
       Seq(
@@ -145,6 +145,7 @@ object Stats {
       fs.rename(bakP, liveP)
       throw new java.io.IOException(s"stats refresh of $live failed to promote")
     }
+    graft.Catalog.invalidate(live)
     fs.delete(bakP, true)
     statsDf
   }
@@ -161,7 +162,7 @@ object Stats {
     try {
       val fs = graft.Catalog.fsFor(tablePath, spark)
       if (fs.exists(new org.apache.hadoop.fs.Path(statsPath(tablePath))))
-        Some(graft.Catalog.readCurrent(spark, statsPath(tablePath)))
+        Some(graft.Catalog.read(spark, statsPath(tablePath)))
       else None
     } catch { case _: Exception => None }
 

@@ -47,7 +47,7 @@ object Dedup {
   private[operators] def shingleIndex(spark: SparkSession, dir: String): DataFrame = {
     val idx = graft.Scratch.materialize(spark, "shingle_idx",
       ShingleIndexVersion, dir)(staging => buildShingleIndex(spark, dir, staging))
-    graft.Catalog.readStable(spark, idx)
+    graft.Catalog.read(spark, idx)
   }
 
   /** DuckDB mirror of [[docShingleHashes]] as a WITH-clause body. */
@@ -240,7 +240,7 @@ object Dedup {
     val idx = graft.Scratch.materialize(spark, "prefix_idx", version, dir)(
       staging => buildPrefixPostings(hs, JaccardThreshold, DocFreqCap)
         .write.parquet(staging))
-    graft.Catalog.readStable(spark, idx)
+    graft.Catalog.read(spark, idx)
   }
 
   /** Default-parameter prefix-filter candidates over the persisted
@@ -599,7 +599,7 @@ object Dedup {
     val idx = graft.Scratch.materialize(spark, "neardup_pairs",
       neardupPairsVersion, dir)(staging =>
       minhashLshPairsCapped(DocFreqCap)(spark, dir).write.parquet(staging))
-    graft.Catalog.readStable(spark, idx)
+    graft.Catalog.read(spark, idx)
   }
 
   /** [[minhashLshPairs]] with an explicit df cap on the prefix arm (specs
@@ -737,7 +737,7 @@ object Dedup {
           .filter(col("jaccard_raw") >= JaccardThreshold)
           .select(col("da"), col("db"), col("jaccard"))
           .write.parquet(staging))
-    graft.Catalog.readStable(spark, idx)
+    graft.Catalog.read(spark, idx)
   }
 
   /** Gate entry: d4's relation SERVED from persisted artifacts end to end.
@@ -921,7 +921,7 @@ object Dedup {
           graft.expressions.HashFunctions.winnow_fingerprints(
             col("text"), WinnowK, WinnowW).as("fps"))
         .write.parquet(staging))
-    graft.Catalog.readStable(spark, idx)
+    graft.Catalog.read(spark, idx)
   }
 
   /** d5 with an explicit posting-list df cap. Candidates come off the

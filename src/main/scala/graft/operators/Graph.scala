@@ -184,7 +184,7 @@ object Graph {
     val idx = linkGraph(spark, dir)
     pageRankOf(
       () => Catalog.documents(spark, dir).select(col("doc_id")),
-      () => graft.Catalog.readStable(spark, idx),
+      () => graft.Catalog.read(spark, idx),
       Iters)
       .orderBy(col("doc_id"))
   }
@@ -285,7 +285,7 @@ object Graph {
   private def buildComponentEdges(spark: SparkSession, dir: String,
       linkIdx: String, out: String): Unit = {
     val docs = Catalog.documents(spark, dir).select(col("doc_id"))
-    val e = graft.Catalog.readStable(spark, linkIdx).select(col("src"), col("dst"))
+    val e = graft.Catalog.read(spark, linkIdx).select(col("src"), col("dst"))
     e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .join(docs.withColumnRenamed("doc_id", "src"), Seq("src"), "left_semi")
@@ -308,7 +308,7 @@ object Graph {
     val idx = componentEdges(spark, dir)
     componentsOf(
       () => Catalog.documents(spark, dir).select(col("doc_id")),
-      () => graft.Catalog.readStable(spark, idx),
+      () => graft.Catalog.read(spark, idx),
       Iters)
       .orderBy(col("doc_id"))
   }
@@ -493,7 +493,7 @@ object Graph {
     */
   private def buildTriangleEdges(spark: SparkSession, symIdx: String,
       out: String): Unit =
-    orientedOf(() => graft.Catalog.readStable(spark, symIdx))
+    orientedOf(() => graft.Catalog.read(spark, symIdx))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
 
   private[operators] def triangleEdges(spark: SparkSession, dir: String): String = {
@@ -510,8 +510,8 @@ object Graph {
     val ori = triangleEdges(spark, dir)
     triangleCore(
       () => Catalog.documents(spark, dir).select(col("doc_id")),
-      () => degreesOf(() => graft.Catalog.readStable(spark, sym)),
-      () => graft.Catalog.readStable(spark, ori))
+      () => degreesOf(() => graft.Catalog.read(spark, sym)),
+      () => graft.Catalog.read(spark, ori))
       .orderBy(col("doc_id"))
   }
 
@@ -625,7 +625,7 @@ object Graph {
     val idx = linkGraph(spark, dir)
     hitsOf(
       () => Catalog.documents(spark, dir).select(col("doc_id")),
-      () => graft.Catalog.readStable(spark, idx).select(col("src"), col("dst")),
+      () => graft.Catalog.read(spark, idx).select(col("src"), col("dst")),
       HitsIters)
       .orderBy(col("doc_id"))
   }
@@ -722,7 +722,7 @@ object Graph {
     val sym = componentEdges(spark, dir)
     kcoreOf(
       () => Catalog.documents(spark, dir).select(col("doc_id")),
-      () => graft.Catalog.readStable(spark, sym),
+      () => graft.Catalog.read(spark, sym),
       KCoreK, KCoreRounds)
       .orderBy(col("doc_id"))
   }
@@ -821,7 +821,7 @@ object Graph {
     val sym = componentEdges(spark, dir)
     bfsHopsOf(
       () => Catalog.documents(spark, dir).select(col("doc_id")),
-      () => graft.Catalog.readStable(spark, sym),
+      () => graft.Catalog.read(spark, sym),
       () => Catalog.documents(spark, dir)
         .filter(col("doc_id") % BfsSeedMod === 0L).select(col("doc_id")),
       BfsRounds)
@@ -909,7 +909,7 @@ object Graph {
     val idx = linkGraph(spark, dir)
     trustRankOf(
       () => Catalog.documents(spark, dir).select(col("doc_id")),
-      () => graft.Catalog.readStable(spark, idx),
+      () => graft.Catalog.read(spark, idx),
       () => Catalog.documents(spark, dir)
         .filter(col("doc_id") % BfsSeedMod === 0L).select(col("doc_id")),
       Iters)
@@ -976,7 +976,7 @@ object Graph {
     val idx = linkGraph(spark, dir)
     degreeProfileOf(
       Catalog.documents(spark, dir).select(col("doc_id")),
-      graft.Catalog.readStable(spark, idx).select(col("src"), col("dst")))
+      graft.Catalog.read(spark, idx).select(col("src"), col("dst")))
   }
 
   val degreeProfileSql: String = {

@@ -868,7 +868,7 @@ object Multimodal {
     val idx = graft.Scratch.materialize(spark, "media_micro",
       s"bins$FeatureBins-residue-micro-v1", dir)(staging =>
       microFeaturesOf(mediaTable(spark, dir)).write.parquet(staging))
-    graft.Catalog.readStable(spark, idx)
+    graft.Catalog.read(spark, idx)
   }
 
   /** Bench-warmup hook (the media sibling of the other index prewarms). */

@@ -898,7 +898,7 @@ object Profile {
         (t, Catalog.table(spark, dir, t), cs) })
         .write.parquet(staging)
     }
-    graft.Catalog.readStable(spark, path)
+    graft.Catalog.read(spark, path)
   }
 
   /** Bench warmup hook (the Dedup.prewarmIndexes precedent): force-build
@@ -1015,7 +1015,7 @@ object Profile {
   /** The persisted distinct candidate projection of one table. */
   private def fdDistinctRelation(spark: SparkSession, dir: String,
       table: String, cs: Seq[String]): DataFrame =
-    graft.Catalog.readStable(spark, fdDistinctPath(spark, dir, table, cs))
+    graft.Catalog.read(spark, fdDistinctPath(spark, dir, table, cs))
 
   /** (table_name, det_col, dep_col, n_det, n_pairs, holds) for every
     * ordered candidate pair within each table.
@@ -1431,7 +1431,7 @@ object Profile {
       fdG3Of(FdCandidateCols.map { case (t, cs) =>
         (t, Catalog.table(spark, dir, t), cs) })
         .write.parquet(staging))
-    graft.Catalog.readStable(spark, p)
+    graft.Catalog.read(spark, p)
   }
 
   def fdG3(spark: SparkSession, dir: String): DataFrame =
@@ -1510,9 +1510,9 @@ object Profile {
     val dp = fdDistinctPath(spark, dir, table, cs)
     val p = graft.Scratch.materialize(spark, s"fd_l1_$table",
       FdLevel1Version + "-" + cs.mkString("_"), dir)(staging =>
-      fdDiscoveryOf(Seq((table, graft.Catalog.readStable(spark, dp), cs)))
+      fdDiscoveryOf(Seq((table, graft.Catalog.read(spark, dp), cs)))
         .write.parquet(staging))
-    graft.Catalog.readStable(spark, p)
+    graft.Catalog.read(spark, p)
   }
 
   /** (table_name, det1, det2, dep_col, n_det, n_pairs, holds) for every
@@ -1925,7 +1925,7 @@ object Profile {
       keyDiscoveryOf(FkCandidateCols.map { case (t, cs) =>
         (t, Catalog.table(spark, dir, t), cs) })
         .write.parquet(staging))
-    graft.Catalog.readStable(spark, p)
+    graft.Catalog.read(spark, p)
   }
 
   def keyDiscovery(spark: SparkSession, dir: String): DataFrame =

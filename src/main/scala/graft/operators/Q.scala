@@ -52,17 +52,18 @@ object Q {
     * Use on the SMALL pre-fan-out relation (cheap shuffle, rows ≤ corpus
     * keys), never on a post-explode or payload-bearing relation.
     *
-    * The width probe is PLAN-AWARE (round-16, ADVICE r15 item #1): for an
-    * exchange-free plan (a scan/filter/project over a table or artifact)
-    * the probe goes through `df.rdd`, which composes narrow RDDs without
-    * running anything; for a plan that CONTAINS exchanges that same probe
-    * would, under AQE, materialize every query stage — a full duplicate
-    * execution (measured on the IVF maintained-lists path: n12
-    * 0.56 s → 1.26 s; and m10's survivor pipeline executed twice per run
-    * through r15). So exchange-bearing plans skip the probe and
-    * repartition unconditionally: their runtime width is AQE's
-    * byte-proxy coalescing, which is exactly the wrong answer for the
-    * compute-dense kernels this helper feeds (the spreadBy rationale).
+    * The width probe is PLAN-AWARE (round-16, ADVICE r15 item #1),
+    * decided on the OPTIMIZED LOGICAL plan: a plan with a join,
+    * aggregate, window, distinct, repartition, global sort or limit
+    * repartitions unconditionally, since `df.rdd` on it would, under AQE,
+    * materialize every query stage — a full duplicate execution
+    * (measured on the IVF maintained-lists path: n12 0.56 s → 1.26 s;
+    * and m10's survivor pipeline executed twice per run through r15) —
+    * and its runtime width is AQE's byte-proxy coalescing, exactly the
+    * wrong answer for the compute-dense kernels this helper feeds (the
+    * spreadBy rationale). Only a scan/filter/project plan is probed
+    * through `df.rdd`, which runs nothing. (The physical `sparkPlan`
+    * lacks the join and aggregate exchanges on Spark 4.1.)
     * Do NOT hang it on a shared root relation consumed by many cheap
     * operators: each use inserts a repartition exchange, and for kernels
     * that were already sub-100 ms the extra stage is pure loss
@@ -79,10 +80,15 @@ object Q {
     * (m9 5.8 s, n2 3.1 s, the d-family candidate verifies).
     */
   def spread(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical._
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val hasExchange = df.queryExecution.sparkPlan.exists(
-      _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
-    if (hasExchange) df.repartition(target)
+    val shuffles = df.queryExecution.optimizedPlan.exists {
+      case _: Join | _: Aggregate | _: Window | _: Distinct |
+          _: RepartitionOperation | _: RebalancePartitions | _: GlobalLimit => true
+      case s: Sort => s.global
+      case _ => false
+    }
+    if (shuffles) df.repartition(target)
     else if (df.rdd.getNumPartitions >= target) df
     else df.repartition(target)
   }

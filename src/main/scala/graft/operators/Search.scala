@@ -131,7 +131,7 @@ object Search {
           .sortWithinPartitions(col("tok"))
           .write.parquet(staging)
     }
-    graft.Catalog.readStable(spark, p)
+    graft.Catalog.read(spark, p)
   }
 
   private[operators] def statsIndex(spark: SparkSession, dir: String): DataFrame = {
@@ -139,7 +139,7 @@ object Search {
       staging =>
         statsOf(withDl(Catalog.documents(spark, dir))).write.parquet(staging)
     }
-    graft.Catalog.readStable(spark, p)
+    graft.Catalog.read(spark, p)
   }
 
   /** Bench warmup hook: build the postings + stats artifacts so steady-
@@ -363,7 +363,7 @@ object Search {
         .sortWithinPartitions(col("tok"))
         .write.parquet(staging)
     }
-    graft.Catalog.readStable(spark, p)
+    graft.Catalog.read(spark, p)
   }
 
   /** The MaxScore candidate set over explicit scoring atoms

@@ -393,7 +393,7 @@ object Similarity {
         .toDF("c", "d", "x").coalesce(1).write.parquet(staging)
     }
     val arr = Array.fill(k)(new Array[Float](Dim))
-    graft.Catalog.readStable(spark, idx).collect()
+    graft.Catalog.read(spark, idx).collect()
       .foreach(r => arr(r.getInt(0))(r.getInt(1)) = r.getFloat(2))
     arr.map(_.toSeq).toSeq
   }
@@ -422,7 +422,7 @@ object Similarity {
           .filter(col("cosine") >= PairThreshold)
           .write.parquet(staging)
       })
-    graft.Catalog.readStable(spark, idx)
+    graft.Catalog.read(spark, idx)
   }
 
   /** Bench-warmup hook (the n5 sibling of [[Dedup.prewarmIndexes]]). */
@@ -470,7 +470,7 @@ object Similarity {
           col("embedding"))
         .write.parquet(staging)
     }
-    graft.Catalog.readStable(spark, idx)
+    graft.Catalog.read(spark, idx)
   }
 
   /** The maintained read view: persisted lists ∪ freshly-assigned delta
@@ -628,7 +628,7 @@ object Similarity {
           Seq("vec_id"), "left_anti")
         .write.parquet(staging)
     }
-    graft.Catalog.readStable(spark, p)
+    graft.Catalog.read(spark, p)
   }
 
   def annIvfCompact(spark: SparkSession, dir: String): DataFrame = {

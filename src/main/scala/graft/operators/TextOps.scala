@@ -557,7 +557,7 @@ object TextOps {
     val p = graft.Scratch.materialize(spark, "bpe_merges",
       BpeMergesVersion, dir)(staging =>
       bpeInductionOf(Catalog.documents(spark, dir)).write.parquet(staging))
-    graft.Catalog.readStable(spark, p)
+    graft.Catalog.read(spark, p)
   }
 
   /** Bench warmup hook (the Dedup.prewarmIndexes precedent). */

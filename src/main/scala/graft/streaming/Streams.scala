@@ -221,8 +221,10 @@ object Streams {
           .select(col("doc_id"), col("scrubbed").as("text"),
             col("source"), col("fp"))
           .dropDuplicates("doc_id")
+        // the registry pins the table's schema, so upsert's own read of it
+        // runs no second inference; its append invalidates the pin
         val existingFps = scala.util.Try(
-          spark.read.parquet(tablePath).select(col("fp")).distinct())
+          graft.Catalog.read(spark, tablePath).select(col("fp")).distinct())
         existingFps match {
           case scala.util.Success(fps) =>
             graft.lifecycle.Lifecycle.upsert(tablePath,
@@ -233,8 +235,7 @@ object Streams {
             // table directory read-fails above (so we land here) but
             // would make the default-mode write throw and wedge the
             // stream on every retry of its first batch
-            survivors.write.mode(org.apache.spark.sql.SaveMode.Append)
-              .parquet(tablePath)
+            graft.lifecycle.Lifecycle.append(survivors, tablePath)
         }
       }
   }

@@ -20,7 +20,7 @@ class StatsSpec extends SparkSuite {
     val expected = graft.Catalog.nation(spark, sfDir).count()
     assert(Stats.rowCount(spark, p).contains(expected))
     assert(Stats.sizeBytes(spark, p).exists(_ > 0))
-    val st = graft.Catalog.tableStats(spark, p).get.collect()
+    val st = Stats.read(spark, p).get.collect()
       .map(r => r.getString(0) -> r).toMap
     val key = st("n_nationkey")
     assert(key.getString(3).toLong == 0, "min(n_nationkey)")
@@ -49,7 +49,7 @@ class StatsSpec extends SparkSuite {
     graft.Catalog.nation(spark, sfDir).limit(0).write.parquet(p)
     Stats.analyze(spark, p)
     assert(Stats.rowCount(spark, p).contains(0L))
-    val st = graft.Catalog.tableStats(spark, p).get.collect()
+    val st = Stats.read(spark, p).get.collect()
     assert(st.nonEmpty && st.forall(r => r.isNullAt(3) && r.isNullAt(4)))
   }
 

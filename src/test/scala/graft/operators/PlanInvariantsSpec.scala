@@ -310,4 +310,12 @@ class PlanInvariantsSpec extends SparkSuite {
     assert(exchanges("a11_decayed_engagement") <= 2,
       s"a11 grew a shuffle: ${exchanges("a11_decayed_engagement")}")
   }
+
+  test("Q.spread over an aggregate repartitions without running a job") {
+    // under AQE a df.rdd width probe of an aggregate materializes its
+    // shuffle stage; the decision must come from the logical plan
+    val agg = spark.range(1000).groupBy().count()
+    val (jobs, _) = jobsDuring(Q.spread(agg))
+    assert(jobs.isEmpty, s"Q.spread ran jobs: $jobs")
+  }
 }
