@@ -33,20 +33,24 @@ object DriverJobs {
   }
 
   /** Runs every `(name, body)` on `pool` and returns the results in
-    * input order. Job descriptions read `"<label>: <name>"`.
+    * input order. Job descriptions read `"<label>: <name>"`; jobs carry the
+    * caller's job tags, so a [[Metrics]] recorder counts them.
     */
   def runAll[T](spark: SparkSession, pool: ExecutorService, label: String)(
       tasks: Seq[(String, () => T)]): Seq[T] = {
     val sc = spark.sparkContext
     val group = s"graft-$label-${UUID.randomUUID()}"
+    val tags = sc.getJobTags()
     val done = new ExecutorCompletionService[T](pool)
     val futures = tasks.map { case (name, body) =>
       done.submit(() => {
         sc.setJobGroup(group, s"$label: $name")
+        sc.addJobTags(tags)
         SparkSession.setActiveSession(spark)
         try body()
         finally {
           sc.clearJobGroup()
+          sc.clearJobTags()
           SparkSession.clearActiveSession()
         }
       })

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -10,10 +9,9 @@ import graft.expressions._
 /** Session-extension entry point: registers every custom Catalyst
   * expression as a SQL function, so `spark.sql("SELECT size_pretty(b) …")`
   * works cluster-wide via
-  * `--conf spark.sql.extensions=graft.GraftExtensions`.
-  *
-  * For sessions created without the conf (tests, notebooks), call
-  * [[GraftExtensions.registerAll]].
+  * `--conf spark.sql.extensions=graft.GraftExtensions`, and injects the
+  * two optimizer rules. [[GraftSession.local]] and the test session set
+  * that conf; it is the only way the surface is registered.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -129,22 +127,4 @@ object GraftExtensions {
         case _ => throw new IllegalArgumentException(
           "cdc_boundaries expects (hex_text) or (hex_text, w, d)")
       }))
-
-  /** Imperative registration for an existing session: the SQL functions
-    * AND the optimizer rule, so conf-less sessions get the same plans as
-    * `spark.sql.extensions=graft.GraftExtensions` ones.
-    */
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    definitions.foreach { case (name, i, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
-      val _ = i
-    }
-    Seq(graft.plans.LatestPerKeyRewrite, graft.plans.RangeJoinRewrite)
-      .foreach { rule =>
-        if (!spark.experimental.extraOptimizations.contains(rule))
-          spark.experimental.extraOptimizations =
-            spark.experimental.extraOptimizations :+ rule
-      }
-  }
 }

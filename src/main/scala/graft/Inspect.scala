@@ -1,13 +1,11 @@
 package graft
 
 import java.io.PrintStream
-import java.util.UUID
 
 import scala.collection.immutable.ListMap
-import scala.collection.mutable
 import scala.util.control.NonFatal
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -21,9 +19,9 @@ import graft.operators.Q
   * jobs that building the DataFrame ran (eager checkpoints, loops). `run`
   * prewarms, then writes each target `repeats` times (default 2) through
   * the noop sink, as Bench does, printing one JSON line per repeat; the
-  * last adds the slowest stages. Only jobs of the call's own job group
-  * count: jobs handed to [[DriverJobs]] run under its group and are left
-  * out. Every target is tried; any failure or unknown name exits 1.
+  * last adds the slowest stages. [[Metrics]] counts the jobs, including
+  * those handed to [[DriverJobs]] (`Stats.analyze`'s passes). Every target
+  * is tried; any failure or unknown name exits 1.
   */
 object Inspect {
   def main(args: Array[String]): Unit = {
@@ -59,10 +57,10 @@ object Inspect {
     val failed = wanted.filterNot { name =>
       try {
         if (mode == "plan") {
-          val (df, rec) = recorded(spark, name)(registry(name).run(spark, dir))
+          val (df, report) = Metrics(spark)(registry(name).run(spark, dir))
           out.println(s"\n===== $name =====")
           out.println(Json.write(ListMap("query" -> name,
-            "jobs_at_construction" -> rec.jobStart.size)))
+            "jobs_at_construction" -> report.jobs.size)))
           out.println(df.queryExecution.explainString(FormattedMode))
         } else (1 to repeats).foreach { i =>
           out.println(runOnce(spark, dir, registry(name), i, i == repeats))
@@ -79,7 +77,7 @@ object Inspect {
   /** One repeat through the noop sink, as one JSON line. */
   private def runOnce(spark: SparkSession, dir: String, q: Q, repeat: Int,
       last: Boolean): String = {
-    val ((startMs, endMs, wallS), rec) = recorded(spark, q.name) {
+    val ((startMs, endMs, wallS), report) = Metrics(spark) {
       val (ms, t0) = (System.currentTimeMillis(), System.nanoTime())
       q.run(spark, dir).write.format("noop").mode("overwrite").save()
       (ms, System.currentTimeMillis(), (System.nanoTime() - t0) / 1e9)
@@ -87,14 +85,13 @@ object Inspect {
     // a job's gap is the time since the previous job ended: planning and
     // scheduling time that no stage shows (negative when jobs overlap)
     var prevEnd = startMs
-    val timeline = rec.jobStart.toSeq.sortBy(_._2).map { case (id, start) =>
-      val end = rec.jobEnd.getOrElse(id, start)
-      val job = ListMap("job" -> id, "gap_ms" -> (start - prevEnd),
-        "run_ms" -> (end - start))
+    val timeline = report.jobs.sortBy(_.start).map { j =>
+      val end = j.end.getOrElse(j.start)
+      val job = ListMap("job" -> j.id, "gap_ms" -> (j.start - prevEnd),
+        "run_ms" -> (end - j.start))
       prevEnd = math.max(prevEnd, end)
       job
     }
-    val stages = rec.stages.toSeq
     def wallMs(s: StageInfo) =
       s.completionTime.getOrElse(0L) - s.submissionTime.getOrElse(0L)
     def totals(ss: Seq[StageInfo]) = {
@@ -104,64 +101,16 @@ object Inspect {
         "shuffle_write_mb" -> m.map(_.shuffleWriteMetrics.bytesWritten).sum / 1e6)
     }
     val line = ListMap("query" -> q.name, "repeat" -> repeat,
-      "wall_s" -> wallS, "jobs" -> rec.jobStart.size,
-      "stages" -> stages.size) ++ totals(stages) ++
+      "wall_s" -> wallS, "jobs" -> report.jobs.size,
+      "stages" -> report.stages.size) ++ totals(report.stages) ++
       ListMap("job_timeline" -> timeline, "tail_gap_ms" -> (endMs - prevEnd))
     Json.write(if (!last) line else line + ("top_stages" ->
-      stages.sortBy(-wallMs(_)).take(30).map { s =>
+      report.stages.sortBy(-wallMs(_)).take(30).map { s =>
         val m = s.taskMetrics
         ListMap("stage" -> s.stageId, "wall_ms" -> wallMs(s)) ++
           totals(Seq(s)) ++ ListMap("records" ->
           (m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead),
           "name" -> s.name.takeWhile(_ != '\n').take(70))
       }))
-  }
-
-  /** The jobs of one job group and the stages they ran. */
-  private final class Recorder(val group: String) extends SparkListener {
-    val marker = s"$group-drain"
-    val jobStart = mutable.LinkedHashMap.empty[Int, Long]
-    val jobEnd = mutable.Map.empty[Int, Long]
-    val stages = mutable.ArrayBuffer.empty[StageInfo]
-    private val stageIds = mutable.Set.empty[Int]
-    private val markerJobs = mutable.Set.empty[Int]
-    @volatile var drained = false
-
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-      if (g.contains(group)) {
-        jobStart(e.jobId) = e.time
-        stageIds ++= e.stageIds
-      } else if (g.contains(marker)) markerJobs += e.jobId
-    }
-
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-      if (markerJobs(e.jobId)) drained = true
-      else if (jobStart.contains(e.jobId)) jobEnd(e.jobId) = e.time
-    }
-
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      synchronized { if (stageIds(e.stageInfo.stageId)) stages += e.stageInfo }
-  }
-
-  /** Runs `body` under a fresh job group; returns its result and what the
-    * group ran. The listener bus is asynchronous: once a marker job run
-    * after `body` is seen to end, every earlier event has been delivered.
-    */
-  private def recorded[T](spark: SparkSession, name: String)(
-      body: => T): (T, Recorder) = {
-    val sc = spark.sparkContext
-    val rec = new Recorder(s"graft-inspect-${UUID.randomUUID()}")
-    sc.addSparkListener(rec)
-    try {
-      sc.setJobGroup(rec.group, s"inspect: $name")
-      val result = try body finally sc.clearJobGroup()
-      sc.setJobGroup(rec.marker, s"inspect: $name: drain")
-      try spark.range(1).collect() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!rec.drained && System.nanoTime() < deadline) Thread.sleep(5)
-      if (!rec.drained) throw new IllegalStateException("listener bus did not drain")
-      (result, rec)
-    } finally sc.removeSparkListener(rec)
   }
 }

@@ -3,6 +3,7 @@ package graft.lifecycle
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 import graft.Catalog
 
@@ -24,8 +25,19 @@ import graft.Catalog
   */
 object Lifecycle {
 
-  /** S7 — plain append. */
+  /** S7 — plain append. A column whose type differs from the table's would
+    * land without error and then break every later read of the table, so
+    * it is rejected before anything is written. */
   def append(table: DataFrame, path: String): Unit = {
+    implicit val spark: SparkSession = table.sparkSession
+    if (hasDataFiles(path)) {
+      val resolver = spark.sessionState.analyzer.resolver
+      val target = Catalog.read(spark, path).schema
+      for (f <- table.schema; t <- target.find(t => resolver(t.name, f.name))
+          if !DataType.equalsStructurally(f.dataType, t.dataType, ignoreNullability = true))
+        throw new IllegalArgumentException(s"append to $path: column ${f.name} " +
+          s"is ${f.dataType.sql}, but the table's ${t.name} is ${t.dataType.sql}")
+    }
     table.write.mode(SaveMode.Append).parquet(path)
     Catalog.invalidate(path)
   }

@@ -28,14 +28,14 @@ class DashboardSpec extends SparkSuite {
   }
 
   test("every job of one refresh runs under the same job group, described by section") {
-    val (jobs, _) = jobsDuring(Dashboard.collectIndexConcurrently(spark, sfDir))
+    val jobs = Metrics(spark)(Dashboard.collectIndexConcurrently(spark, sfDir))._2.jobs
     assert(jobs.size >= 10, s"expected a job per refresh task, saw $jobs")
-    val groups = jobs.values.map(_._1).toSet
+    val groups = jobs.map(_.group).toSet
     assert(groups.size == 1 && groups.head != null,
       s"refresh jobs ran under groups $groups")
-    assert(jobs.values.forall(j =>
-      Option(j._2).exists(_.startsWith("dashboard refresh: "))), jobs)
-    assert(jobs.values.map(_._2).toSet.contains("dashboard refresh: top_consumers"))
+    assert(jobs.forall(j =>
+      Option(j.description).exists(_.startsWith("dashboard refresh: "))), jobs)
+    assert(jobs.map(_.description).toSet.contains("dashboard refresh: top_consumers"))
   }
 
   test("a failed section cancels its siblings and is named in the error") {
@@ -47,13 +47,10 @@ class DashboardSpec extends SparkSuite {
           Files.copy(f, dir.resolve(Paths.get(sfDir).relativize(f).toString))
         }
       }
-    var err: Throwable = null
-    val (jobs, ended) = jobsDuring {
-      err = intercept[RuntimeException](
-        Dashboard.collectIndexConcurrently(spark, dir.toString))
-    }
+    val (err, report) = Metrics(spark)(intercept[RuntimeException](
+      Dashboard.collectIndexConcurrently(spark, dir.toString)))
     assert(err.getMessage.contains("top_consumers"), err.getMessage)
-    val live = jobs.keySet -- ended
+    val live = report.jobs.filter(_.end.isEmpty).map(_.id)
     assert(live.isEmpty, s"jobs of the failed refresh still running: $live")
   }
 

@@ -28,6 +28,14 @@ class InspectSpec extends SparkSuite {
     assert(!spark.sparkContext.isStopped)
   }
 
+  test("plan counts the jobs the query hands to DriverJobs (Stats.analyze's passes)") {
+    val ((code, out, _), r) = Metrics(spark)(inspect("plan", sfDir, "s15_archive_restore"))
+    assert(code == 0, r.jobs)
+    assert(r.jobs.exists(j => Option(j.description).exists(_.startsWith("analyze "))), r.jobs)
+    val counted = jsonLines(out).head.get("jobs_at_construction").asInt
+    assert(counted == r.jobs.size, s"Inspect counted $counted of ${r.jobs}")
+  }
+
   test("run prints one JSON line per repeat with the jobs it ran") {
     val (code, out, _) = inspect("run", sfDir, "a2_total_sessions", "2")
     assert(code == 0)

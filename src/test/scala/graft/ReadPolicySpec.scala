@@ -12,16 +12,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * second policy from growing back: no retired read helper may reappear,
   * and no file but `Catalog.scala` may infer a parquet schema itself. A
   * read that passes an explicit schema, or merges footers with
-  * `mergeSchema`, is not an inference and is allowed. No Spark session
-  * needed — pure source reconciliation, run from the repo root.
+  * `mergeSchema`, is not an inference and is allowed. Likewise only
+  * [[Metrics]] may listen to Spark, and only `spark.sql.extensions` may
+  * add optimizer rules. No Spark session needed — run from the repo root.
   */
 class ReadPolicySpec extends AnyFunSuite {
 
-  private val sources: List[Path] = {
-    val s = Files.walk(Paths.get("src/main/scala"))
+  private def scalaFiles(root: String): List[Path] = {
+    val s = Files.walk(Paths.get(root))
     try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
     finally s.close()
   }
+  private val sources = scalaFiles("src/main/scala")
 
   private def stripComments(src: String): String =
     src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
@@ -49,5 +51,16 @@ class ReadPolicySpec extends AnyFunSuite {
     assert(hits.isEmpty,
       "schema-less parquet reads outside Catalog.scala (route them through " +
         s"Catalog.read or Catalog.readPartitioned):\n${hits.mkString("\n")}")
+  }
+
+  test("Metrics.scala holds the only SparkListener; extraOptimizations is unused") {
+    val hits = for {
+      p <- sources ++ scalaFiles("src/test/scala")
+      name = p.getFileName.toString if name != "ReadPolicySpec.scala" // names both
+      line <- stripComments(Files.readString(p)).linesIterator
+      if line.contains("extraOptimizations") ||
+        (line.contains("SparkListener") && name != "Metrics.scala")
+    } yield s"$p: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -79,7 +79,6 @@ class NormalizeSparkSpec extends SparkSuite {
   }
 
   test("SQL registration + whole-stage codegen + NULL passthrough") {
-    graft.GraftExtensions.registerAll(spark)
     val row = spark.sql(
       "SELECT norm_text('  Caf\u00e9\u200B  TIME ') AS t, " +
         "norm_text(CAST(NULL AS STRING)) AS nl").collect().head

@@ -103,6 +103,16 @@ class LifecycleSpec extends SparkSuite {
     assert(spark.read.parquet(path).count() == before + 10)
   }
 
+  test("append and upsert reject a column of another type; the table stays readable") {
+    val path = Files.createTempDirectory("graft_lct_types_").toString + "/nation"
+    Catalog.nation(spark, sfDir).write.parquet(path)
+    val wide = Catalog.nation(spark, sfDir).withColumn("n_nationkey", col("n_nationkey") + 100L)
+    val e = intercept[IllegalArgumentException](Lifecycle.append(wide, path))
+    assert(e.getMessage.contains("n_nationkey is BIGINT, but the table's n_nationkey is INT"))
+    intercept[IllegalArgumentException](Lifecycle.upsert(path, wide, Seq("n_nationkey"))(spark))
+    assert(spark.read.parquet(path).collect().length == 25)
+  }
+
   test("incremental rollup refresh equals full recompute across multiple deltas") {
     implicit val s: SparkSession = spark
     val ev = Catalog.events(spark, sfDir)

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, Column, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Catalog, SparkSuite}
+import graft.{Catalog, Metrics, SparkSuite}
 
 /** The schema registry's invalidation contract (`Catalog.read` /
   * `Catalog.invalidate`), per engine write primitive: a re-read with no
@@ -33,7 +33,7 @@ class SchemaRegistrySpec extends SparkSuite {
     Catalog.fsFor(p, spark).setTimes(new Path(p), t, -1)
 
   private def inferenceJobs(p: String): Int =
-    jobsDuring(Catalog.read(spark, p))._1.size
+    Metrics(spark)(Catalog.read(spark, p))._2.jobs.size
 
   test("a schema-changing rewrite is seen even when its mtime equals the cached one") {
     val p = table()

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSuite
+import graft.{Metrics, SparkSuite}
 
 /** ANALYZE-equivalent statistics: computed values, the compact (VACUUM
   * ANALYZE) refresh, and the stats → broadcast planning feedback loop.
@@ -34,11 +34,11 @@ class StatsSpec extends SparkSuite {
   test("analyze runs its two passes under one job group, described by pass") {
     val p = Files.createTempDirectory("graft_stats_group_").toString + "/nation"
     graft.Catalog.nation(spark, sfDir).write.parquet(p)
-    val (jobs, _) = jobsDuring(Stats.analyze(spark, p))
+    val jobs = Metrics(spark)(Stats.analyze(spark, p))._2.jobs
     // the stats write runs on the calling thread, outside the group
-    val passes = jobs.values.filter(_._1 != null)
-    assert(passes.map(_._1).toSet.size == 1, s"pass jobs ran under $jobs")
-    assert(passes.map(_._2).toSet == Set(s"analyze $p: stats", s"analyze $p: hot_keys"),
+    val passes = jobs.filter(_.group != null)
+    assert(passes.map(_.group).toSet.size == 1, s"pass jobs ran under $jobs")
+    assert(passes.map(_.description).toSet == Set(s"analyze $p: stats", s"analyze $p: hot_keys"),
       s"pass jobs ran under $jobs")
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkEntry, SparkSuite}
+import graft.{Metrics, SparkEntry, SparkSuite}
 
 /** Scale guard over every registered query's final executed physical
   * plan: no cartesian or nested-loop join may appear except the three
@@ -315,7 +315,7 @@ class PlanInvariantsSpec extends SparkSuite {
     // under AQE a df.rdd width probe of an aggregate materializes its
     // shuffle stage; the decision must come from the logical plan
     val agg = spark.range(1000).groupBy().count()
-    val (jobs, _) = jobsDuring(Q.spread(agg))
+    val jobs = Metrics(spark)(Q.spread(agg))._2.jobs
     assert(jobs.isEmpty, s"Q.spread ran jobs: $jobs")
   }
 }

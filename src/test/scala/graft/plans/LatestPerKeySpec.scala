@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,15 +8,11 @@ import graft.SparkSuite
 /** The latest-per-key optimizer rule: plan shape + result equivalence. */
 class LatestPerKeySpec extends SparkSuite {
 
-  // spark.sql.extensions is a static conf: it binds at the first session of
-  // the JVM, so the shared suite session (SparkSuite) carries the rule.
-  private lazy val ruleSession: SparkSession = spark
-
   /** Non-nullable test relation (the rule is conservative about nullable
     * ordering keys, and parquet columns read back nullable).
     */
-  private def sampleDf(s: SparkSession) = {
-    import s.implicits._
+  private def sampleDf = {
+    import spark.implicits._
     Seq(
       (1L, 10L, 100L, "a"), (1L, 20L, 101L, "b"), (1L, 20L, 99L, "c"),
       (2L, 5L, 50L, "d"), (2L, 7L, 49L, "e"),
@@ -25,14 +20,14 @@ class LatestPerKeySpec extends SparkSuite {
       .toDF("k", "ts", "id", "payload")
   }
 
-  private def windowed(s: SparkSession) = {
-    val df = sampleDf(s)
+  private def windowed = {
+    val df = sampleDf
     val w = Window.partitionBy(col("k")).orderBy(col("ts").desc, col("id").desc)
     df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
   }
 
   test("rule rewrites the window into an aggregate (no Window in plan)") {
-    val plan = windowed(ruleSession).queryExecution.optimizedPlan
+    val plan = windowed.queryExecution.optimizedPlan
     val hasWindow = plan.collect {
       case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
     }.nonEmpty
@@ -46,12 +41,12 @@ class LatestPerKeySpec extends SparkSuite {
   test("rewritten result equals the window result") {
     // baseline via `rn <= 1` — semantically identical, but the rule only
     // matches `rn = 1`, so this executes as a real window
-    val df = sampleDf(spark)
+    val df = sampleDf
     val w = Window.partitionBy(col("k")).orderBy(col("ts").desc, col("id").desc)
     val baseline = df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 1)
       .select("k", "ts", "id", "payload", "rn")
       .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
-    val got = windowed(ruleSession)
+    val got = windowed
       .select("k", "ts", "id", "payload", "rn")
       .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long])
     assert(got.toSeq == baseline.toSeq)
@@ -62,7 +57,7 @@ class LatestPerKeySpec extends SparkSuite {
     // the reference's ORDER BY id DESC LIMIT 1 snapshot idiom over the
     // metrics table: parquet columns read back nullable, and the default
     // DESC NULLS LAST placement matches struct-ordering max_by semantics
-    val ev = graft.Catalog.events(ruleSession, sfDir)
+    val ev = graft.Catalog.events(spark, sfDir)
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts").desc)
     val latest = ev.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
     val plan = latest.queryExecution.optimizedPlan
@@ -105,7 +100,7 @@ class LatestPerKeySpec extends SparkSuite {
 
   test("rule leaves non-matching windows alone (rn > 1, mixed direction)") {
     import org.apache.spark.sql.catalyst.plans.logical
-    val df = sampleDf(ruleSession)
+    val df = sampleDf
     val wTop2 = Window.partitionBy(col("k")).orderBy(col("ts").desc)
     val top2 = df.withColumn("rn", row_number().over(wTop2)).filter(col("rn") <= 2)
     assert(top2.queryExecution.optimizedPlan.collect {
