@@ -88,8 +88,20 @@ object Catalog {
     spark.read.schema(s).parquet(p)
   }
 
-  /** Drop `p`'s pinned schema; the next [[read]] infers it again. */
-  def invalidate(p: String): Unit = schemas.remove(p)
+  private val generation = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Drop `p`'s pinned schema; the next [[read]] infers it again. Also
+    * advances [[schemaGeneration]], so plans kept across reads (the
+    * dashboard's prepared sections) are built again. */
+  def invalidate(p: String): Unit = {
+    schemas.remove(p)
+    generation.incrementAndGet()
+  }
+
+  /** Advanced by every [[invalidate]], after the schema is dropped. A plan
+    * built after reading generation g holds only schemas pinned at g or
+    * later; it is stale once the generation differs from g. */
+  private[graft] def schemaGeneration: Long = generation.get
 
   /** The events (metric stream) table.
     *

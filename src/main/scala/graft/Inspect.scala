@@ -8,6 +8,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.graftshim.Shims
 
 import graft.operators.Q
 
@@ -20,8 +21,12 @@ import graft.operators.Q
   * prewarms, then writes each target `repeats` times (default 2) through
   * the noop sink, as Bench does, printing one JSON line per repeat; the
   * last adds the slowest stages. [[Metrics]] counts the jobs, including
-  * those handed to [[DriverJobs]] (`Stats.analyze`'s passes). Every target
-  * is tried; any failure or unknown name exits 1.
+  * those handed to [[DriverJobs]] (`Stats.analyze`'s passes), and sums the
+  * repeat's plan phases into `plan_ms`. `codegen_compiles` is the number
+  * of generated sources Janino compiled during the repeat, read from Spark's
+  * JVM-wide `CodegenMetrics`: it counts every thread's compiles, so it
+  * belongs to the repeat only when nothing else runs in the JVM. Every
+  * target is tried; any failure or unknown name exits 1.
   */
 object Inspect {
   def main(args: Array[String]): Unit = {
@@ -77,11 +82,13 @@ object Inspect {
   /** One repeat through the noop sink, as one JSON line. */
   private def runOnce(spark: SparkSession, dir: String, q: Q, repeat: Int,
       last: Boolean): String = {
+    val compiles = Shims.codegenCompiles
     val ((startMs, endMs, wallS), report) = Metrics(spark) {
       val (ms, t0) = (System.currentTimeMillis(), System.nanoTime())
       q.run(spark, dir).write.format("noop").mode("overwrite").save()
       (ms, System.currentTimeMillis(), (System.nanoTime() - t0) / 1e9)
     }
+    val compiled = Shims.codegenCompiles - compiles
     // a job's gap is the time since the previous job ended: planning and
     // scheduling time that no stage shows (negative when jobs overlap)
     var prevEnd = startMs
@@ -102,7 +109,9 @@ object Inspect {
     }
     val line = ListMap("query" -> q.name, "repeat" -> repeat,
       "wall_s" -> wallS, "jobs" -> report.jobs.size,
-      "stages" -> report.stages.size) ++ totals(report.stages) ++
+      "stages" -> report.stages.size, "plan_ms" -> ListMap(
+        Seq("analysis", "optimization", "planning").map(p => p -> report.planMs(p)): _*),
+      "codegen_compiles" -> compiled) ++ totals(report.stages) ++
       ListMap("job_timeline" -> timeline, "tail_gap_ms" -> (endMs - prevEnd))
     Json.write(if (!last) line else line + ("top_stages" ->
       report.stages.sortBy(-wallMs(_)).take(30).map { s =>

@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -39,19 +37,24 @@ class DashboardSpec extends SparkSuite {
   }
 
   test("a failed section cancels its siblings and is named in the error") {
-    val dir = Files.createTempDirectory("graft-dash-nolineitem")
-    Files.list(Paths.get(sfDir)).iterator().asScala
-      .filterNot(_.getFileName.toString == "lineitem.parquet")
-      .foreach { src =>
-        Files.walk(src).iterator().asScala.foreach { f =>
-          Files.copy(f, dir.resolve(Paths.get(sfDir).relativize(f).toString))
-        }
-      }
-    val (err, report) = Metrics(spark)(intercept[RuntimeException](
-      Dashboard.collectIndexConcurrently(spark, dir.toString)))
+    // prepared on a full copy, so the refreshes below run the kept plans
+    val dir = fixtureCopy("graft-dash-badlineitem")
+    def refresh() = Dashboard.collectIndexConcurrently(spark, dir.toString)
+    refresh()
+    // listed but unreadable: top_consumers fails in its own job, while
+    // its siblings' jobs run
+    val lineitem = dir.resolve("lineitem.parquet")
+    Files.write(lineitem, "not parquet".getBytes("UTF-8"))
+    val (err, report) = Metrics(spark)(intercept[RuntimeException](refresh()))
     assert(err.getMessage.contains("top_consumers"), err.getMessage)
+    val siblings = report.jobs.filterNot(_.description.endsWith(": top_consumers"))
+    assert(siblings.nonEmpty, s"no sibling job ran: ${report.jobs}")
     val live = report.jobs.filter(_.end.isEmpty).map(_.id)
     assert(live.isEmpty, s"jobs of the failed refresh still running: $live")
+    // a deleted table fails the refresh too, instead of serving no rows
+    Files.delete(lineitem)
+    val gone = intercept[RuntimeException](refresh())
+    assert(gone.getMessage.contains("top_consumers"), gone.getMessage)
   }
 
   test("every index section is bounded by the serving cap") {

@@ -45,7 +45,13 @@ class InspectSpec extends SparkSuite {
       assert(l.get("jobs").asInt >= 1, l)
       assert(l.get("wall_s").asDouble > 0, l)
       assert(l.get("job_timeline").size == l.get("jobs").asInt, l)
+      val plan = l.get("plan_ms")
+      assert(Seq("analysis", "optimization", "planning").forall(p =>
+        plan.has(p) && plan.get(p).asLong >= 0), l)
+      assert(l.get("codegen_compiles").asLong >= 0, l)
     }
+    // the second repeat finds its generated classes in the codegen cache
+    assert(lines.last.get("codegen_compiles").asLong == 0, lines.last)
     assert(lines.last.has("top_stages") && !lines.head.has("top_stages"))
     assert(!spark.sparkContext.isStopped)
   }

@@ -3,8 +3,9 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.CountDownLatch
 
-/** [[Metrics]] scopes a call by its job tag: other threads' jobs are left
-  * out, jobs handed to [[DriverJobs]] count, and recorders nest. */
+/** [[Metrics]] scopes a call by its job tag: other threads' jobs and
+  * queries are left out, jobs handed to [[DriverJobs]] count, and
+  * recorders nest. */
 class MetricsSpec extends SparkSuite {
 
   private def oneJob(): Long = spark.sparkContext.parallelize(1 to 5, 1).count()
@@ -30,5 +31,18 @@ class MetricsSpec extends SparkSuite {
     val (inner, outer) = Metrics(spark) { oneJob(); Metrics(spark)(oneJob())._2 }
     assert(inner.jobs.size == 1 && outer.jobs.size == 2, (inner.jobs, outer.jobs))
     assert(outer.jobs.map(_.id).contains(inner.jobs.head.id))
+  }
+
+  test("plan phases come from the call's own SQL executions, not another thread's") {
+    val go = new CountDownLatch(1)
+    val other = new Thread(() => { go.await(); spark.range(10).selectExpr("sum(id)").collect() })
+    other.start()
+    val (_, report) = Metrics(spark) {
+      go.countDown(); other.join(); spark.range(5).selectExpr("count(id)").collect()
+    }
+    assert(report.executions.size == 1, report.executions)
+    assert(Seq("analysis", "optimization", "planning")
+      .forall(report.executions.head.phases.contains), report.executions)
+    assert(report.planMs("analysis") == report.executions.head.phases("analysis"))
   }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,6 +14,14 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSuite.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** A writable copy of the fixture's tables in a fresh temp dir. */
+  def fixtureCopy(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    Files.list(Paths.get(sfDir)).iterator().asScala
+      .foreach(f => Files.copy(f, dir.resolve(f.getFileName.toString)))
+    dir
+  }
 }
 
 object SparkSuite {

@@ -1,7 +1,7 @@
 #!/bin/bash
 # The whole gate in one shot: compile, tests, every registered plan,
 # oracle verify, bench, the benchmark's unit tests and one short checked
-# dashboard run.
+# run of each benchmark workload.
 # Usage: tools/full_check.sh  (from /root/repo)
 set -eo pipefail
 cd "$(dirname "$0")/.."
@@ -18,3 +18,5 @@ echo "== perfbench unit tests"
 python3 -m unittest discover -s perfbench/tests 2>&1 | tail -1
 echo "== perfbench dashboard (short checked run; non-zero on any failed check)"
 python3 perfbench/run.py --workload dashboard --seed 1 --seconds 3 --trace 0 | tail -1
+echo "== perfbench analytics (short checked run; non-zero on any failed check)"
+python3 perfbench/run.py --workload analytics --seed 1 --seconds 3 --trace 0 | tail -1
