@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Table registry over the driver-provided parquet fixtures.
   *
@@ -44,8 +45,7 @@ object Catalog {
       case other        => read(spark, path(dir, other))
     }
 
-  private val schemas = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   /** The schema registry: one pinned schema per parquet path. A bare
     * `spark.read.parquet(p)` runs a footer-inference Spark JOB on every
@@ -60,13 +60,11 @@ object Catalog {
     * Only the schema is pinned; the file listing is taken per read, so
     * appended rows are always seen.
     *
-    * Invalidation is explicit, never by filesystem timing: [[invalidate]]
-    * is the only thing that removes an entry. The engine's write
-    * primitives call it AFTER their commit (the rename or the append):
-    * `Lifecycle.rewriteAt` (delete, update, truncate, compact, MERGE),
-    * `Lifecycle.append`, `upsert`, `archive`, `restoreOlderThan` and
-    * `Stats.analyze`. An inference racing a commit cannot outlive it:
-    * `remove` waits for an in-flight `computeIfAbsent` on the same key.
+    * Invalidation is explicit, never by filesystem timing. The engine's
+    * writes (`Lifecycle.commit` and `Lifecycle.append`, which every write
+    * primitive, `Stats.analyze` and the ingest sinks go through) report
+    * the schema they wrote to [[committed]], which drops a pin only when
+    * that schema differs from it: a same-schema write keeps the pin.
     *
     * CONTRACT: a writer outside the engine that changes the schema of a
     * path read here calls [[invalidate]] after its commit; until then
@@ -98,9 +96,22 @@ object Catalog {
     generation.incrementAndGet()
   }
 
-  /** Advanced by every [[invalidate]], after the schema is dropped. A plan
-    * built after reading generation g holds only schemas pinned at g or
-    * later; it is stale once the generation differs from g. */
+  /** An engine write committed `written` at `p`. The pin is dropped, and
+    * [[schemaGeneration]] advances, only when `p` is pinned and `written`
+    * differs from the pin by more than nullability, which Spark's file
+    * source drops on read-back. An inference racing the commit cannot
+    * outlive it: `computeIfPresent`, like [[invalidate]]'s `remove`, waits
+    * for an in-flight `computeIfAbsent` on the same key. */
+  private[graft] def committed(p: String, written: StructType): Unit = {
+    var changed = false
+    schemas.computeIfPresent(p, (_, pinned) =>
+      if (DataType.equalsIgnoreNullability(pinned, written)) pinned else { changed = true; null })
+    if (changed) generation.incrementAndGet()
+  }
+
+  /** Advanced whenever a pin is dropped, after the drop. A plan built after
+    * reading generation g holds only schemas pinned at g or later; it is
+    * stale once the generation differs from g. */
   private[graft] def schemaGeneration: Long = generation.get
 
   /** The events (metric stream) table.
@@ -280,8 +291,7 @@ object Catalog {
     * incompatible types) still fail fast in the merge, which is the
     * correct outcome: that is corruption, not evolution.
     */
-  def readEvolved(spark: SparkSession, path: String,
-      expected: org.apache.spark.sql.types.StructType): DataFrame = {
+  def readEvolved(spark: SparkSession, path: String, expected: StructType): DataFrame = {
     val merged = spark.read.option("mergeSchema", "true").parquet(path)
     // presence must match Spark's OWN column resolution — the session
     // resolver follows spark.sql.caseSensitive and is locale-independent,

@@ -100,12 +100,12 @@ object Dashboard {
 
   /** A prepared section set: each refresh task's optimized plan, built
     * while [[Catalog.schemaGeneration]] read `generation`. */
-  private final case class Prepared(generation: Long, plans: Map[String, LogicalPlan])
+  private[graft] final case class Prepared(generation: Long, plans: Map[String, LogicalPlan])
 
   /** One prepared set per (session, dir, section cap); the cap is part of
     * the plans. A set whose generation is behind the catalog's is built
-    * again by the next refresh. */
-  private val prepared = new ConcurrentHashMap[(SparkSession, String, Int), Prepared]()
+    * again by the next refresh, and dropped when any newer set is put. */
+  private[graft] val prepared = new ConcurrentHashMap[(SparkSession, String, Int), Prepared]()
 
   def index(spark: SparkSession, dir: String,
       sectionCap: Int = DefaultSectionCap): IndexPayload = {
@@ -131,11 +131,11 @@ object Dashboard {
     * cap): the first refresh prepares the set inside its tasks, where plan
     * construction overlaps the other tasks' jobs, and later refreshes run
     * the kept plans (see [[prepare]]). Every refresh still lists each
-    * relation's files afresh (see [[relisted]]), so a part file a writer
-    * adds is read by the next refresh without any call, and no rows are
-    * cached. [[Catalog.invalidate]], which a schema change calls, makes
-    * the next refresh prepare the set again. Physical planning and AQE run
-    * on every refresh.
+    * relation's files afresh (see [[relisted]]), so rows a writer adds
+    * or rewrites are read by the next refresh without any call, and no
+    * rows are cached. Only a schema change (a new [[Catalog.schemaGeneration]])
+    * prepares the set again, not an engine write that keeps the schema.
+    * Physical planning and AQE run on every refresh.
     */
   def collectIndexConcurrently(spark: SparkSession, dir: String,
       sectionCap: Int = DefaultSectionCap): Map[String, Long] = {
@@ -158,11 +158,13 @@ object Dashboard {
           (plan, df.collect().length.toLong)
         })
       })
-    // put outside any computeIfAbsent: a set is prepared by Spark jobs on
-    // other threads (the Scratch "Recursive update" lesson); two refreshes
-    // preparing one key at once each put an equivalent set
-    if (kept.isEmpty) prepared.put(key, Prepared(generation,
-      refreshTasks.map(_._1).zip(done.map(_._1)).toMap))
+    // put outside any computeIfAbsent: Spark jobs on other threads prepare
+    // a set (the Scratch "Recursive update" lesson); two refreshes of one
+    // key each put an equivalent set. Older sets can never be served again.
+    if (kept.isEmpty) {
+      prepared.values.removeIf(_.generation < generation)
+      prepared.put(key, Prepared(generation, refreshTasks.map(_._1).zip(done.map(_._1)).toMap))
+    }
     refreshTasks.zip(done).flatMap { case ((_, sections, _), (_, n)) =>
       sections.map(_ -> n)
     }.toMap

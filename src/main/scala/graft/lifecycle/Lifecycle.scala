@@ -1,7 +1,8 @@
 package graft.lifecycle
 
-
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
@@ -27,19 +28,25 @@ object Lifecycle {
 
   /** S7 — plain append. A column whose type differs from the table's would
     * land without error and then break every later read of the table, so
-    * it is rejected before anything is written. */
+    * it is rejected before anything is written. A frame holding exactly
+    * the table's columns is written in the table's column order (upsert's
+    * anti-join puts its keys first), and the written schema goes to
+    * [[Catalog.committed]], as [[commit]]'s does. */
   def append(table: DataFrame, path: String): Unit = {
     implicit val spark: SparkSession = table.sparkSession
-    if (hasDataFiles(path)) {
+    val rows = if (!hasDataFiles(path)) table else {
       val resolver = spark.sessionState.analyzer.resolver
       val target = Catalog.read(spark, path).schema
       for (f <- table.schema; t <- target.find(t => resolver(t.name, f.name))
           if !DataType.equalsStructurally(f.dataType, t.dataType, ignoreNullability = true))
         throw new IllegalArgumentException(s"append to $path: column ${f.name} " +
           s"is ${f.dataType.sql}, but the table's ${t.name} is ${t.dataType.sql}")
+      val ordered = target.flatMap(t => table.columns.find(resolver(t.name, _)))
+      if (ordered.size != table.columns.length || ordered.size != target.length) table
+      else table.select(ordered.map(c => table.col(s"`${c.replace("`", "``")}`")).toSeq: _*)
     }
-    table.write.mode(SaveMode.Append).parquet(path)
-    Catalog.invalidate(path)
+    rows.write.mode(SaveMode.Append).parquet(path)
+    Catalog.committed(path, rows.schema)
   }
 
   /** S9 — idempotent upsert: insert only rows whose key is absent
@@ -131,40 +138,48 @@ object Lifecycle {
     ()
   }
 
-  /** Unique per-call scratch suffix: two concurrent rewrites of the SAME
-    * table must not share staged/backup roots — with a fixed name, writer
-    * B's Overwrite deletes writer A's staged data and A's swap then
-    * promotes a missing dir (silent data loss). Same fix Stats.analyze got.
-    */
-  private def scratchSuffix(): String =
-    "-" + java.util.UUID.randomUUID().toString
-
-  /** Rewrite-on-write with a staging copy (parquet can't be read and
-    * overwritten in one job): transform → stage → swap, then drop the
-    * path's pinned schema. The one rewrite protocol: DELETE, UPDATE,
-    * TRUNCATE, compaction, the rollup refresh and [[SqlMutations]]'s
-    * MERGE all run through it.
-    */
+  /** Rewrite-on-write (parquet can't be read and overwritten in one job):
+    * `f` of the path's rows, put in place by [[commit]]. DELETE, UPDATE,
+    * TRUNCATE, compaction, the rollup refresh and MERGE run through it. */
   private[lifecycle] def rewriteAt(path: String)(f: DataFrame => DataFrame)(
+      implicit spark: SparkSession): Unit =
+    commit(f(Catalog.read(spark, path)), path)
+
+  /** The one table commit: stage `df` beside `path`, [[swap]] it in, and
+    * report the written schema to [[Catalog.committed]], which drops the
+    * path's pinned schema only when it changed. [[rewriteAt]] and
+    * [[Stats.analyze]] commit through it.
+    */
+  private[lifecycle] def commit(df: DataFrame, path: String)(
       implicit spark: SparkSession): Unit = {
-    val sfx = scratchSuffix()
-    val staged = path.stripSuffix("/") + ".staged" + sfx
-    val backup = path.stripSuffix("/") + ".bak" + sfx
-    f(Catalog.read(spark, path)).write.mode(SaveMode.Overwrite).parquet(staged)
-    val fs = Catalog.fsFor(path, spark)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val stagedP = new org.apache.hadoop.fs.Path(staged)
-    val backupP = new org.apache.hadoop.fs.Path(backup)
-    // move-aside swap: the live path is never deleted before its
-    // replacement exists; a crash leaves either dst or dst.bak recoverable
-    fs.delete(backupP, true)
-    fs.rename(dst, backupP)
-    if (!fs.rename(stagedP, dst)) {
-      fs.rename(backupP, dst) // restore on failed promote
-      throw new java.io.IOException(s"rewrite of $path failed to promote staged data")
+    val staged = sibling(path, "staged")
+    df.write.mode(SaveMode.Overwrite).parquet(staged)
+    swap(Catalog.fsFor(path, spark), new Path(staged), new Path(path),
+      new Path(sibling(path, "bak")))
+    Catalog.committed(path, df.schema)
+  }
+
+  /** `<path>.<kind>-<uuid>`, unique per call: with a fixed name, a second
+    * concurrent writer's Overwrite deletes the first's staged data, and
+    * its cleanup deletes the first's backup. */
+  private def sibling(path: String, kind: String): String =
+    s"${path.stripSuffix("/")}.$kind-${java.util.UUID.randomUUID()}"
+
+  /** The one swap: move `dst` aside to `backup`, promote `staged`, then
+    * delete the backup; a failed promote restores the backup. The live
+    * data is never deleted before its replacement exists, so a crash
+    * leaves `dst` or `backup` recoverable. A missing `dst` is created, and
+    * a missing `staged` removes `dst` (a partition rewritten to nothing).
+    */
+  private def swap(fs: FileSystem, staged: Path, dst: Path, backup: Path): Unit = {
+    val moved = fs.exists(dst)
+    if (moved && !fs.rename(dst, backup))
+      throw new java.io.IOException(s"$dst: could not move the live data aside")
+    if (fs.exists(staged) && !fs.rename(staged, dst)) {
+      if (moved) fs.rename(backup, dst)
+      throw new java.io.IOException(s"$dst: failed to promote staged data")
     }
-    Catalog.invalidate(path)
-    fs.delete(backupP, true)
+    if (moved) fs.delete(backup, true)
   }
 
   // ---------------------------------------------------------------------
@@ -176,49 +191,35 @@ object Lifecycle {
   // ---------------------------------------------------------------------
 
   /** Rewrite only the named partitions: stage the transformed slice, then
-    * swap the affected partition directories one by one (move-aside, crash
-    * -recoverable like [[rewriteAt]]). A partition whose rewritten content
-    * is empty is removed. `f` must not change `partCol` values — rows may
-    * not migrate between partitions through this path.
+    * [[swap]] the affected partition directories one by one. A partition
+    * whose rewritten content is empty is removed. `f` must not change
+    * `partCol` values — rows may not migrate between partitions through
+    * this path.
     *
     * Directory names use Spark's own partition-path escaping
     * (`ExternalCatalogUtils.escapePathName`), so string partition values
     * with reserved characters swap correctly. Backups live in a SIBLING
-    * `<path>.bak/` tree, never inside the table — a crash mid-swap leaves
-    * the partition missing but the table readable (and the backup
+    * `<path>.bak-<uuid>/` tree, never inside the table — a crash mid-swap
+    * leaves the partition missing but the table readable (and the backup
     * recoverable), instead of a bogus `<sub>.bak` partition corrupting
     * partition-column inference.
     */
   def rewritePartitions(path: String, partCol: String, affected: Seq[Any])(
       f: DataFrame => DataFrame)(implicit spark: SparkSession): Unit = {
     if (affected.isEmpty) return
-    val base = path.stripSuffix("/")
-    val sfx = scratchSuffix()
-    val staged = base + ".staged" + sfx
-    val bakRoot = base + ".bak" + sfx
+    val staged = sibling(path, "staged")
+    val bakRoot = new Path(sibling(path, "bak"))
     val slice = Catalog.readPartitioned(spark, path)
       .filter(col(partCol).isin(affected: _*))
     f(slice).write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(staged)
     val fs = Catalog.fsFor(path, spark)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(bakRoot))
+    fs.mkdirs(bakRoot)
     affected.foreach { v =>
-      val sub = partCol + "=" +
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .escapePathName(String.valueOf(v))
-      val dst = new org.apache.hadoop.fs.Path(s"$path/$sub")
-      val src = new org.apache.hadoop.fs.Path(s"$staged/$sub")
-      val bak = new org.apache.hadoop.fs.Path(s"$bakRoot/$sub")
-      fs.delete(bak, true)
-      if (fs.exists(dst)) fs.rename(dst, bak)
-      if (fs.exists(src) && !fs.rename(src, dst)) {
-        fs.rename(bak, dst)
-        throw new java.io.IOException(
-          s"partition rewrite of $path/$sub failed to promote staged data")
-      }
-      fs.delete(bak, true)
+      val sub = partCol + "=" + ExternalCatalogUtils.escapePathName(String.valueOf(v))
+      swap(fs, new Path(s"$staged/$sub"), new Path(s"$path/$sub"), new Path(bakRoot, sub))
     }
-    fs.delete(new org.apache.hadoop.fs.Path(staged), true)
-    fs.delete(new org.apache.hadoop.fs.Path(bakRoot), true)
+    fs.delete(new Path(staged), true)
+    fs.delete(bakRoot, true)
   }
 
   /** True when the path holds at least one parquet data file. A partitioned
@@ -228,7 +229,7 @@ object Lifecycle {
     */
   private def hasDataFiles(path: String)(implicit spark: SparkSession): Boolean = {
     val fs = Catalog.fsFor(path, spark)
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     fs.exists(p) && {
       val it = fs.listFiles(p, true)
       var found = false

@@ -1,6 +1,6 @@
 package graft.lifecycle
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,6 +20,8 @@ import graft.DriverJobs
   *
   * Stats are a snapshot: [[Lifecycle.compact]] refreshes them (VACUUM
   * ANALYZE), and any writer can call [[analyze]] after a batch commit.
+  * [[analyze]] commits through `Lifecycle.commit`; its schema is fixed, so
+  * a refresh keeps the stats path's pinned schema.
   */
 object Stats {
 
@@ -110,9 +112,8 @@ object Stats {
       case Seq(r: Row, h: Map[String, Long] @unchecked) => (r, h)
     }
     val rows = row.getLong(0)
-    val fs = graft.Catalog.fsFor(tablePath, spark)
-    val sizeBytes = fs.getContentSummary(
-      new org.apache.hadoop.fs.Path(tablePath)).getLength
+    val sizeBytes = graft.Catalog.fsFor(tablePath, spark)
+      .getContentSummary(new org.apache.hadoop.fs.Path(tablePath)).getLength
     val out = cols.zipWithIndex.map { case (c, i) =>
       val base = 1 + i * 4
       val hot: java.lang.Long =
@@ -124,29 +125,11 @@ object Stats {
     }
     val statsDf = spark.createDataFrame(
       new java.util.ArrayList[Row](java.util.Arrays.asList(out: _*)), statsSchema)
-    // stage + move-aside swap (the Lifecycle.rewriteAt discipline): an
-    // in-place Overwrite deletes the old files before committing new ones,
-    // so a concurrent snapshot reader would hit FileNotFound and a crash
-    // would leave Some(corrupt). With the swap, a reader sees either
-    // complete stats or none; [[snapshot]] additionally absorbs the
-    // between-renames window, so consumers degrade to "no hint", never to
-    // a failed plan. The staged dir is per-call unique so two concurrent
-    // analyze() writers cannot promote each other's half-written output
-    // (last promote wins with complete data either way).
-    val live = statsPath(tablePath)
-    val liveP = new org.apache.hadoop.fs.Path(live)
-    val stagedP = new org.apache.hadoop.fs.Path(
-      live + ".staged-" + java.util.UUID.randomUUID().toString)
-    val bakP = new org.apache.hadoop.fs.Path(live + ".bak")
-    statsDf.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stagedP.toString)
-    fs.delete(bakP, true)
-    if (fs.exists(liveP)) fs.rename(liveP, bakP)
-    if (!fs.rename(stagedP, liveP)) {
-      fs.rename(bakP, liveP)
-      throw new java.io.IOException(s"stats refresh of $live failed to promote")
-    }
-    graft.Catalog.invalidate(live)
-    fs.delete(bakP, true)
+    // committed by Lifecycle.commit's swap, not an in-place Overwrite, which
+    // deletes the old files before writing the new: a reader sees complete
+    // stats or none, and [[snapshot]] absorbs the between-renames window,
+    // so consumers degrade to "no hint", never to a failed plan
+    Lifecycle.commit(statsDf.coalesce(1), statsPath(tablePath))(spark)
     statsDf
   }
 

@@ -222,7 +222,8 @@ object Streams {
             col("source"), col("fp"))
           .dropDuplicates("doc_id")
         // the registry pins the table's schema, so upsert's own read of it
-        // runs no second inference; its append invalidates the pin
+        // runs no second inference; its same-schema append keeps the pin,
+        // so the next batch infers nothing either
         val existingFps = scala.util.Try(
           graft.Catalog.read(spark, tablePath).select(col("fp")).distinct())
         existingFps match {

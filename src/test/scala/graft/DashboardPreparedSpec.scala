@@ -5,8 +5,8 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.functions._
 
 /** The dashboard's prepared sections: plans kept across refreshes, file
-  * listings taken afresh by each, and the catalog's invalidation as the
-  * one thing that prepares a set again. */
+  * listings taken afresh by each, and a schema change as the one thing
+  * that prepares a set again. */
 class DashboardPreparedSpec extends SparkSuite {
 
   // uncapped, so a row set's count follows the rows its table holds
@@ -19,6 +19,16 @@ class DashboardPreparedSpec extends SparkSuite {
   private def replanned(r: Metrics.Report): Seq[Metrics.Execution] =
     r.executions.filter(e => e.phases.contains("analysis") || e.phases.contains("optimization"))
 
+  /** `events.parquet` moved into a directory of that name, so writers can
+    * add part files to it. */
+  private def eventsDir(dir: Path): Path = {
+    val events = dir.resolve("events.parquet")
+    val part = Files.move(events, dir.resolve("part-00000.parquet"))
+    Files.createDirectory(events)
+    Files.move(part, events.resolve(part.getFileName))
+    events
+  }
+
   test("a refresh after no write runs no analysis and no optimization") {
     val dir = fixtureCopy("graft-prepared-idle")
     refresh(dir)
@@ -30,10 +40,7 @@ class DashboardPreparedSpec extends SparkSuite {
 
   test("a part file a raw writer adds, with no invalidate call, is read by the next refresh") {
     val dir = fixtureCopy("graft-prepared-append")
-    val events = dir.resolve("events.parquet")
-    val part = Files.move(events, dir.resolve("part-00000.parquet"))
-    Files.createDirectory(events)
-    Files.move(part, events.resolve(part.getFileName))
+    val events = eventsDir(dir)
     val before = refresh(dir)
     Files.copy(events.resolve("part-00000.parquet"), events.resolve("part-00001.parquet"))
     val (after, r) = Metrics(spark)(refresh(dir))
@@ -42,6 +49,41 @@ class DashboardPreparedSpec extends SparkSuite {
       assert(before(s) > 0 && after(s) == 2 * before(s), s"$s: $before -> $after")
     }
     assert(after("top_consumers") == before("top_consumers"))
+  }
+
+  test("an engine append to the dashboard's events keeps the set, and the refresh reads its rows") {
+    val dir = fixtureCopy("graft-prepared-lifecycle")
+    val events = eventsDir(dir).toString
+    val before = refresh(dir)
+    lifecycle.Lifecycle.append(Catalog.read(spark, events), events)
+    val (after, r) = Metrics(spark)(refresh(dir))
+    assert(replanned(r).isEmpty, "a same-schema append must not prepare the set again")
+    Seq("slow_queries", "idle_sessions", "backup_delta").foreach { s =>
+      assert(before(s) > 0 && after(s) == 2 * before(s), s"$s: $before -> $after")
+    }
+  }
+
+  test("an engine append to an unrelated table keeps the set") {
+    val dir = fixtureCopy("graft-prepared-unrelated")
+    val other = Files.createTempDirectory("graft-prepared-other").resolve("t").toString
+    Catalog.nation(spark, sfDir).write.parquet(other)
+    Catalog.read(spark, other)
+    refresh(dir)
+    lifecycle.Lifecycle.append(Catalog.nation(spark, sfDir), other)
+    assert(Catalog.read(spark, other).count() == 50)
+    assert(replanned(Metrics(spark)(refresh(dir))._2).isEmpty)
+  }
+
+  test("a set prepared after a schema change drops the sets of older generations") {
+    val (a, b) = (fixtureCopy("graft-prepared-prune-a"), fixtureCopy("graft-prepared-prune-b"))
+    def kept(d: Path) = Dashboard.prepared.containsKey((spark, d.toString, cap))
+    refresh(a)
+    refresh(b)
+    assert(kept(a) && kept(b))
+    Catalog.invalidate(a.resolve("events.parquet").toString)
+    refresh(a)
+    assert(kept(a) && !kept(b), "the set kept for b can never be served again")
+    assert(replanned(Metrics(spark)(refresh(b))._2).nonEmpty)
   }
 
   test("a schema-changing rewrite and Catalog.invalidate prepare the set again") {

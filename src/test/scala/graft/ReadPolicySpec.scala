@@ -12,9 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * second policy from growing back: no retired read helper may reappear,
   * and no file but `Catalog.scala` may infer a parquet schema itself. A
   * read that passes an explicit schema, or merges footers with
-  * `mergeSchema`, is not an inference and is allowed. Likewise only
-  * [[Metrics]] may listen to Spark, and only `spark.sql.extensions` may
-  * add optimizer rules. No Spark session needed — run from the repo root.
+  * `mergeSchema`, is not an inference and is allowed. No engine write may
+  * drop a pinned schema unconditionally with `Catalog.invalidate`.
+  * Likewise only [[Metrics]] may listen to Spark, and only
+  * `spark.sql.extensions` may add optimizer rules. No Spark session
+  * needed — run from the repo root.
   */
 class ReadPolicySpec extends AnyFunSuite {
 
@@ -51,6 +53,16 @@ class ReadPolicySpec extends AnyFunSuite {
     assert(hits.isEmpty,
       "schema-less parquet reads outside Catalog.scala (route them through " +
         s"Catalog.read or Catalog.readPartitioned):\n${hits.mkString("\n")}")
+  }
+
+  test("only Catalog.scala calls Catalog.invalidate; engine writes report their schema") {
+    val hits = for {
+      p <- sources if p.getFileName.toString != "Catalog.scala"
+      line <- stripComments(Files.readString(p)).linesIterator
+      if line.contains("Catalog.invalidate")
+    } yield s"$p: ${line.trim}"
+    assert(hits.isEmpty, "a write path must report its schema through " +
+      s"Catalog.committed, which drops a pin only on a change:\n${hits.mkString("\n")}")
   }
 
   test("Metrics.scala holds the only SparkListener; extraOptimizations is unused") {

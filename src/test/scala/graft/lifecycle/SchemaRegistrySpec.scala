@@ -8,12 +8,14 @@ import org.apache.spark.sql.functions._
 
 import graft.{Catalog, Metrics, SparkSuite}
 
-/** The schema registry's invalidation contract (`Catalog.read` /
-  * `Catalog.invalidate`), per engine write primitive: a re-read with no
-  * write in between infers nothing, and the first read after a write
-  * infers exactly once and sees what the write committed. Every case pins
-  * the written dir's mtime back to its pre-write value, so only explicit
-  * invalidation — not filesystem timing — can explain the re-inference.
+/** The schema registry's invalidation contract (`Catalog.read`,
+  * `Catalog.committed`, `Catalog.invalidate`), per engine write primitive:
+  * a re-read with no write in between infers nothing; after a write that
+  * keeps the table's schema the next read infers nothing either, and after
+  * one that changes it (a new column, a wider type) the next read infers
+  * exactly once. Either way the read sees what the write committed. Every
+  * case pins the written dir's mtime back to its pre-write value, so only
+  * the registry — not filesystem timing — can explain a re-inference.
   */
 class SchemaRegistrySpec extends SparkSuite {
 
@@ -57,9 +59,11 @@ class SchemaRegistrySpec extends SparkSuite {
   }
 
   /** What one write primitive commits: the registry-served path it
-    * writes, the write, and the rows matching `seen` afterwards.
+    * writes, the write, the rows matching `seen` afterwards, and the
+    * inferences the first read after it runs (1 iff the schema changed).
     */
-  private case class Write(target: String, run: () => Unit, seen: Column, rows: Long)
+  private case class Write(target: String, run: () => Unit, seen: Column, rows: Long,
+      infers: Int = 0)
 
   private def nationPlus(offset: Int) =
     Catalog.nation(spark, sfDir)
@@ -72,12 +76,15 @@ class SchemaRegistrySpec extends SparkSuite {
   // case watches the stats dataset, the last path it commits
   private val writes: Seq[(String, String => Write)] = Seq(
     "rewriteAt" -> (p => Write(p,
-      () => Lifecycle.rewriteAt(p)(_.withColumn("c", lit(1))), col("c") === 1, 25)),
+      () => Lifecycle.rewriteAt(p)(_.withColumn("c", lit(1))), col("c") === 1, 25, 1)),
     "delete" -> (p => Write(p,
       () => Lifecycle.delete(p, col("n_regionkey") === 0), lit(true), 20)),
     "update" -> (p => Write(p,
       () => Lifecycle.update(p, "n_name", lit("x"), col("n_regionkey") === 0),
       col("n_name") === "x", 5)),
+    "update to a wider type" -> (p => Write(p,
+      () => Lifecycle.update(p, "n_regionkey", lit(0.5), col("n_regionkey") === 0),
+      col("n_regionkey") === 0.5, 5, 1)),
     "updateMulti" -> (p => Write(p,
       () => Lifecycle.updateMulti(p,
         Seq("n_name" -> lit("y"), "n_regionkey" -> lit(9)), col("n_regionkey") === 1),
@@ -122,6 +129,7 @@ class SchemaRegistrySpec extends SparkSuite {
         col("table_row_count") === 50, statsRows)
     })
 
+  // `infers`: 0 after a write that keeps the schema, 1 after one that changes it
   writes.foreach { case (name, prepare) =>
     test(s"$name: a re-read infers nothing; the first read after the write infers once and sees it") {
       val w = prepare(table())
@@ -130,8 +138,22 @@ class SchemaRegistrySpec extends SparkSuite {
       val before = mtime(w.target)
       w.run()
       setMtime(w.target, before)
-      assert(inferenceJobs(w.target) == 1, "the first read after the write did not infer once")
+      assert(inferenceJobs(w.target) == w.infers,
+        s"the first read after the write did not infer ${w.infers} time(s)")
       assert(Catalog.read(spark, w.target).filter(w.seen).count() == w.rows)
     }
+  }
+
+  test("an upsert keyed on a later column appends in the table's column order and keeps the pin") {
+    val p = table()
+    val columns = Catalog.read(spark, p).columns.toSeq
+    // the anti-join puts its key, n_name, first
+    Lifecycle.upsert(p, Catalog.nation(spark, sfDir)
+      .withColumn("n_name", concat(col("n_name"), lit("!"))), Seq("n_name"))
+    assert(inferenceJobs(p) == 0)
+    assert(Catalog.read(spark, p).filter(col("n_name").endsWith("!")).count() == 25)
+    val files = Catalog.fsFor(p, spark).listStatus(new Path(p)).map(_.getPath.toString)
+      .filter(_.endsWith(".parquet"))
+    assert(files.forall(f => spark.read.parquet(f).columns.toSeq == columns), files.mkString(", "))
   }
 }

@@ -42,6 +42,22 @@ class StatsSpec extends SparkSuite {
       s"pass jobs ran under $jobs")
   }
 
+  test("analyze leaves a <stats>.bak dir another writer holds, and commits complete stats") {
+    implicit val s = spark
+    val p = Files.createTempDirectory("graft_stats_bak_").toString + "/nation"
+    graft.Catalog.nation(spark, sfDir).write.parquet(p)
+    Stats.analyze(spark, p)
+    val held = java.nio.file.Paths.get(Stats.statsPath(p) + ".bak")
+    Files.createDirectories(held)
+    Files.writeString(held.resolve("evidence"), "another writer's backup")
+    Lifecycle.append(graft.Catalog.nation(spark, sfDir), p)
+    Stats.analyze(spark, p)
+    assert(Files.exists(held.resolve("evidence")), s"$held was deleted")
+    val st = Stats.read(spark, p).get.collect()
+    assert(st.map(_.getString(0)).toSet == graft.Catalog.nation(spark, sfDir).columns.toSet)
+    assert(st.forall(_.getLong(1) == 50), st.mkString("; "))
+  }
+
   test("analyze handles a zero-row table (null min/max, count 0)") {
     implicit val s = spark
     val scratch = Files.createTempDirectory("graft_stats_empty_").toString

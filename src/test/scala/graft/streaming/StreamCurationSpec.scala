@@ -2,10 +2,11 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.SparkSuite
+import graft.{Metrics, SparkSuite}
 
 case class IngestDoc(doc_id: Long, text: String, source: String)
 
@@ -157,6 +158,29 @@ class StreamCurationSpec extends SparkSuite {
       // sanity: the load actually landed
       assert(spark.read.parquet(table).count() === 6 * 200L)
     } finally q.stop()
+  }
+
+  test("a steady-state batch after the bootstrap runs no schema inference") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-scur-pin").toString
+    val table = s"$tmp/corpus"
+    val mem = MemoryStream[IngestDoc](spark)
+    // the schema inferences of the one micro-batch that lands `wave`: the
+    // query starts inside the recorder, so its stream thread carries the
+    // recorder's job tag, and stops after the batch. A stream names every
+    // stage after its start call, not "parquet at Catalog.scala"; a footer
+    // inference is told apart as the batch's one job outside a query plan,
+    // Spark's bare parallelize + mapPartitions over the footers.
+    def inferences(wave: Int): Seq[StageInfo] = Metrics(spark) {
+      mem.addData((0 until 3).map(i =>
+        IngestDoc(wave * 10L + i, s"wave$wave doc$i " + cleanBase, "s1")): _*)
+      val q = Streams.curationIngestSink(mem.toDF(), table, s"$tmp/ckpt").start()
+      try q.processAllAvailable() finally q.stop()
+    }._2.stages.filter(_.rddInfos.exists(_.scope.exists(_.name == "parallelize")))
+    inferences(0) // bootstraps the table
+    assert(inferences(1).size == 1, "the first batch over the table infers its schema once")
+    assert(inferences(2).isEmpty, "a same-schema upsert dropped the table's pinned schema")
+    assert(spark.read.parquet(table).count() == 9)
   }
 
   test("curation ingest equals the batch rules applied to the same delta") {
