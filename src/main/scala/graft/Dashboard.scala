@@ -16,10 +16,11 @@ import graft.operators.{Monitoring, Relational}
   * `views.index_resource` / `views.cpu_usage_grid`
   * (reference myapp/views.py:380,756,826) finds the same payload here.
   *
-  * All members are lazy plans — nothing executes until the serving layer
+  * All members are lazy plans — no section runs until the serving layer
   * collects; the ~20 sequential statements the reference issues per page
   * load (views.py:394-681) become independent Spark jobs a server can run
-  * concurrently.
+  * concurrently. The index sections run plans kept per dir (see
+  * [[served]]), whichever entry point serves them.
   */
 object Dashboard {
 
@@ -40,16 +41,16 @@ object Dashboard {
       latencyBands: DataFrame,
       ohlcBars: DataFrame)
 
-  /** Default per-section row cap. The reference's slow/idle/blocked
-    * sections return every matching row (views.py:396-421 — no LIMIT),
-    * which is 4,828 rows at sf0.1 and ~500k at 100× — an unbounded
-    * driver-side collect. Serving caps each row-set section to its top-N
-    * BY ITS OWN ORDER (the sections already sort by relevance — duration
-    * desc, etc.), so the cap composes with the sort into a
-    * TakeOrderedAndProject instead of a global sort + collect. The
-    * underlying operators stay uncapped for the correctness gate.
+  /** Per-section row cap. The reference's slow/idle/blocked sections
+    * return every matching row (views.py:396-421 — no LIMIT), which is
+    * 4,828 rows at sf0.01 and ~500k at 100× — an unbounded driver-side
+    * collect. Serving caps each row-set section to its top-N BY ITS OWN
+    * ORDER (the sections already sort by relevance — duration desc, etc.),
+    * so the cap composes with the sort into a TakeOrderedAndProject
+    * instead of a global sort + collect. The underlying operators stay
+    * uncapped for the correctness gate.
     */
-  val DefaultSectionCap = 500
+  val SectionCap = 500
 
   /** One `GET /index/` section, under the name a refresh reports it by:
     * either a row set built on its own, or one column of
@@ -58,61 +59,92 @@ object Dashboard {
     */
   private sealed trait Section { def name: String }
   private final case class RowSet(name: String,
-      build: (SparkSession, String, Int) => DataFrame) extends Section
+      build: (SparkSession, String) => DataFrame) extends Section
   private final case class Scalar(name: String, column: String) extends Section
 
   /** Every index section, in [[IndexPayload]] field order. Row-set
     * sections are capped to their top-N by their own order (see
-    * [[DefaultSectionCap]]).
+    * [[SectionCap]]).
     */
   private val Sections: Seq[Section] = Seq(
-    RowSet("slow_queries", Monitoring.slowQueries(_, _).limit(_)),
-    RowSet("idle_sessions", Monitoring.idleSessions(_, _).limit(_)),
-    RowSet("blocked_sessions", Monitoring.blockedSessions(_, _).limit(_)),
+    RowSet("slow_queries", Monitoring.slowQueries(_, _).limit(SectionCap)),
+    RowSet("idle_sessions", Monitoring.idleSessions(_, _).limit(SectionCap)),
+    RowSet("blocked_sessions", Monitoring.blockedSessions(_, _).limit(SectionCap)),
     Scalar("active_users", "active_users"),
     Scalar("total_sessions", "total_sessions"),
     Scalar("connection_load", "connection_headroom_pct"),
     Scalar("cache_hit_ratio", "hit_ratio_pct"),
     Scalar("tps", "tps"),
-    RowSet("top_consumers", (s, d, _) => Monitoring.topResourceConsumers(s, d)),
-    RowSet("table_sizes", (s, d, _) => Monitoring.tableSizesPretty(s, d)),
-    RowSet("backup_delta", Monitoring.lagDelta(_, _).limit(_)),
-    RowSet("users_roles", Monitoring.usersWithRoles(_, _).limit(_)),
+    RowSet("top_consumers", Monitoring.topResourceConsumers),
+    RowSet("table_sizes", Monitoring.tableSizesPretty),
+    RowSet("backup_delta", Monitoring.lagDelta(_, _).limit(SectionCap)),
+    RowSet("users_roles", Monitoring.usersWithRoles(_, _).limit(SectionCap)),
     // w14's per-(type, hour) p50/p95/p99 — the latency-band panel class
     // the reference's gauge row approximates with instantaneous values
     // (index.html:1047-1067)
-    RowSet("latency_bands", Monitoring.latencyBands(_, _).limit(_)),
+    RowSet("latency_bands", Monitoring.latencyBands(_, _).limit(SectionCap)),
     // w19's per-(type, hour) excursion envelope — the capacity-review
     // panel class (candlestick history)
-    RowSet("ohlc_bars", Monitoring.ohlcBars(_, _).limit(_)))
+    RowSet("ohlc_bars", Monitoring.ohlcBars(_, _).limit(SectionCap)))
 
   /** The refresh's tasks, one thread each: every row set alone, and the
     * five scalar panels from one collect of their shared aggregate. A task
     * reports its row count under the names of the sections it serves.
     */
-  private val refreshTasks: Seq[(String, Seq[String], (SparkSession, String, Int) => DataFrame)] =
+  private val refreshTasks: Seq[(String, Seq[String], (SparkSession, String) => DataFrame)] =
     Sections.collect { case RowSet(n, build) => (n, Seq(n), build) } :+ ((
-      "scalars", Sections.collect { case s: Scalar => s.name },
-      (s: SparkSession, d: String, _: Int) => Monitoring.indexScalars(s, d)))
+      "scalars", Sections.collect { case s: Scalar => s.name }, Monitoring.indexScalars _))
 
   private lazy val refreshPool =
     DriverJobs.daemonPool("graft-dashboard", refreshTasks.size)
 
-  /** A prepared section set: each refresh task's optimized plan, built
-    * while [[Catalog.schemaGeneration]] read `generation`. */
-  private[graft] final case class Prepared(generation: Long, plans: Map[String, LogicalPlan])
+  /** A refresh task's optimized plan, built while
+    * [[Catalog.schemaGeneration]] read `generation`. */
+  private[graft] final case class Prepared(generation: Long, plan: LogicalPlan)
 
-  /** One prepared set per (session, dir, section cap); the cap is part of
-    * the plans. A set whose generation is behind the catalog's is built
-    * again by the next refresh, and dropped when any newer set is put. */
-  private[graft] val prepared = new ConcurrentHashMap[(SparkSession, String, Int), Prepared]()
+  /** One kept plan per (session, dir, refresh task). A plan whose
+    * generation is behind the catalog's is prepared again when next
+    * served, and dropped when any newer plan is put. */
+  private[graft] val prepared = new ConcurrentHashMap[(SparkSession, String, String), Prepared]()
 
-  def index(spark: SparkSession, dir: String,
-      sectionCap: Int = DefaultSectionCap): IndexPayload = {
-    lazy val scalars = Monitoring.indexScalars(spark, dir)
+  /** The task's DataFrame over its kept plan: the one way [[index]] and
+    * [[collectIndexConcurrently]] serve a section. Between refreshes only
+    * the data changes, not the plans, so each task's DataFrame is built,
+    * analyzed and optimized once per (session, dir) and kept (see
+    * [[prepare]]); only a schema change (a new [[Catalog.schemaGeneration]])
+    * prepares it again, not an engine write that keeps the schema. Every
+    * call lists the plan's files afresh (see [[relisted]]), so rows a
+    * writer adds or rewrites are read without any call, and no rows are
+    * cached. Physical planning and AQE run on every collect.
+    */
+  private def served(spark: SparkSession, dir: String, task: String,
+      build: (SparkSession, String) => DataFrame): DataFrame = {
+    val key = (spark, dir, task)
+    val generation = Catalog.schemaGeneration
+    val plan = Option(prepared.get(key)).filter(_.generation == generation).fold {
+      val plan = prepare(task, build(spark, dir))
+      // a put, not computeIfAbsent: the build can run Spark jobs (a first
+      // schema read) and the map is pruned here; two callers of one key
+      // each put an equivalent plan. Older plans can never be served again.
+      prepared.values.removeIf(_.generation < generation)
+      prepared.put(key, Prepared(generation, plan))
+      plan
+    }(_.plan)
+    Shims.optimizedDataFrame(spark, relisted(spark, plan))
+  }
+
+  /** `GET /index/` payload over the kept plans (see [[served]]): each
+    * member lists its files when `index` is called and runs when
+    * collected. A dir's tables must be whole, unpartitioned file tables;
+    * anything else throws "cannot be prepared".
+    */
+  def index(spark: SparkSession, dir: String): IndexPayload = {
+    val frames = refreshTasks.map { case (task, _, build) =>
+      task -> served(spark, dir, task, build)
+    }.toMap
     Sections.map {
-      case RowSet(_, build) => build(spark, dir, sectionCap)
-      case Scalar(_, column) => scalars.select(column)
+      case RowSet(name, _) => frames(name)
+      case Scalar(_, column) => frames("scalars").select(column)
     } match {
       case Seq(slow, idle, blocked, active, total, load, hit, tps, top, sizes,
           backup, roles, bands, ohlc) =>
@@ -124,48 +156,19 @@ object Dashboard {
   /** Materialize every index section concurrently: the reference issues
     * its ~20 statements sequentially on one cursor (views.py:394-681); as
     * independent Spark jobs they share the scheduler and overlap IO/CPU.
-    * Returns section name → row count (a serving layer would collect rows).
-    *
-    * Between refreshes only the data changes, not the plans, so each
-    * section is built, analyzed and optimized once per (session, dir,
-    * cap): the first refresh prepares the set inside its tasks, where plan
-    * construction overlaps the other tasks' jobs, and later refreshes run
-    * the kept plans (see [[prepare]]). Every refresh still lists each
-    * relation's files afresh (see [[relisted]]), so rows a writer adds
-    * or rewrites are read by the next refresh without any call, and no
-    * rows are cached. Only a schema change (a new [[Catalog.schemaGeneration]])
-    * prepares the set again, not an engine write that keeps the schema.
-    * Physical planning and AQE run on every refresh.
+    * Each task serves its kept plan (see [[served]]); on a dir's first
+    * refresh, its tasks prepare their plans where plan construction
+    * overlaps the other tasks' jobs. Returns section name → row count (a
+    * serving layer would collect rows).
     */
-  def collectIndexConcurrently(spark: SparkSession, dir: String,
-      sectionCap: Int = DefaultSectionCap): Map[String, Long] = {
-    val key = (spark, dir, sectionCap)
-    val generation = Catalog.schemaGeneration
-    val kept = Option(prepared.get(key)).filter(_.generation == generation)
+  def collectIndexConcurrently(spark: SparkSession, dir: String): Map[String, Long] = {
     val done = DriverJobs.runAll(spark, refreshPool, "dashboard refresh")(
-      refreshTasks.map { case (name, _, build) =>
-        name -> (() => {
-          val (plan, df) = kept match {
-            case Some(set) =>
-              val plan = set.plans(name)
-              (plan, Shims.optimizedDataFrame(spark, relisted(spark, plan)))
-            case None =>
-              val df = build(spark, dir, sectionCap)
-              (prepare(name, df), df)
-          }
-          // collect (not count) so every projected expression actually
-          // materializes — count() lets Catalyst prune the section's columns
-          (plan, df.collect().length.toLong)
-        })
+      refreshTasks.map { case (task, _, build) =>
+        // collect (not count) so every projected expression actually
+        // materializes — count() lets Catalyst prune the section's columns
+        task -> (() => served(spark, dir, task, build).collect().length.toLong)
       })
-    // put outside any computeIfAbsent: Spark jobs on other threads prepare
-    // a set (the Scratch "Recursive update" lesson); two refreshes of one
-    // key each put an equivalent set. Older sets can never be served again.
-    if (kept.isEmpty) {
-      prepared.values.removeIf(_.generation < generation)
-      prepared.put(key, Prepared(generation, refreshTasks.map(_._1).zip(done.map(_._1)).toMap))
-    }
-    refreshTasks.zip(done).flatMap { case ((_, sections, _), (_, n)) =>
+    refreshTasks.zip(done).flatMap { case ((_, sections, _), n) =>
       sections.map(_ -> n)
     }.toMap
   }

@@ -776,7 +776,7 @@ object HashFunctions {
     Shims.column(BloomMightContain(Shims.expression(c), words, k))
   def lang_id(c: Column, langs: Seq[String], markers: Seq[Seq[String]]): Column =
     Shims.column(LangIdExpr(Shims.expression(c), langs, markers))
-  def winnow_fingerprints(c: Column, k: Int = 8, w: Int = 16): Column =
+  def winnow_fingerprints(c: Column, k: Int, w: Int): Column =
     Shims.column(WinnowFingerprints(Shims.expression(c), k, w))
   def minhash_sig(c: Column, a: Seq[Long], b: Seq[Long], p: Long): Column =
     Shims.column(MinHashSig(Shims.expression(c), a, b, p))

@@ -66,13 +66,6 @@ object Ddl {
         .stripMargin)
   }
 
-  /** Write-path CHECK enforcement + `INSERT OVERWRITE` (the reference's
-    * DELETE-then-INSERT collapsed into one atomic statement). The input is
-    * pinned with `localCheckpoint` so the validation pass and the insert
-    * see ONE materialized snapshot — no second evaluation of an expensive
-    * relation, and no check/insert window where a non-deterministic or
-    * concurrently-mutated input could sneak a violating row past the CHECK.
-    */
   /** A per-call-unique catalog identifier: two concurrent callers in one
     * session must never race on a shared staging name (round-6 verdict —
     * the fixed `graft_roles_staging` raced DROP vs INSERT).
@@ -80,6 +73,19 @@ object Ddl {
   private def uniqueName(prefix: String): String =
     prefix + "_" + java.util.UUID.randomUUID().toString.replace("-", "").take(12)
 
+  /** Write-path CHECK enforcement + `INSERT OVERWRITE` (the reference's
+    * DELETE-then-INSERT as one statement). The input is pinned with
+    * `localCheckpoint` so the validation pass and the insert see ONE
+    * materialized snapshot — no second evaluation of an expensive
+    * relation, and no check/insert window where a non-deterministic or
+    * concurrently-mutated input could sneak a violating row past the CHECK.
+    * The CHECK passes before anything is deleted, so a violating input
+    * leaves the table as it was. The overwrite itself is not atomic:
+    * Spark's file-source overwrite (`InsertIntoHadoopFsRelationCommand`)
+    * deletes the table's files before its write job runs, so a reader in
+    * between sees the table empty or partly written, and a failed write
+    * leaves it empty.
+    */
   def insertOverwriteChecked(spark: SparkSession, table: String,
       rows: DataFrame): Unit = {
     validIdentifier(table)

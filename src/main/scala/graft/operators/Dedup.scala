@@ -230,15 +230,8 @@ object Dedup {
     // "pos1": layout carries rn for the positional filter
     val version = s"t${(JaccardThreshold * 100).toInt}-cap$DocFreqCap-pos1-" +
       ShingleIndexVersion
-    // materialize the shingle index BEFORE entering the prefix artifact's
-    // build: Scratch.materialize memoizes through computeIfAbsent, and a
-    // build lambda that re-enters materialize would modify the memo map
-    // from inside its own mapping function (ConcurrentHashMap forbids
-    // recursive updates — JDK throws "Recursive update" when the keys
-    // share a bin)
-    val hs = shingleIndex(spark, dir)
     val idx = graft.Scratch.materialize(spark, "prefix_idx", version, dir)(
-      staging => buildPrefixPostings(hs, JaccardThreshold, DocFreqCap)
+      staging => buildPrefixPostings(shingleIndex(spark, dir), JaccardThreshold, DocFreqCap)
         .write.parquet(staging))
     graft.Catalog.read(spark, idx)
   }
@@ -590,12 +583,6 @@ object Dedup {
     * steady-state bench timings measure query cost.
     */
   private[operators] def minhashLshPairs(spark: SparkSession, dir: String): DataFrame = {
-    // materialize the upstream artifacts BEFORE entering this build:
-    // Scratch.materialize memoizes through computeIfAbsent, and a build
-    // lambda re-entering materialize would update the memo map from
-    // inside its own mapping function (see prefixPostings)
-    shingleIndex(spark, dir)
-    prefixPostings(spark, dir)
     val idx = graft.Scratch.materialize(spark, "neardup_pairs",
       neardupPairsVersion, dir)(staging =>
       minhashLshPairsCapped(DocFreqCap)(spark, dir).write.parquet(staging))
@@ -725,15 +712,11 @@ object Dedup {
     * deterministic prefix-arm relation, d4's contract.)
     */
   private[operators] def jaccardPairsIndexed(spark: SparkSession, dir: String): DataFrame = {
-    // pre-materialize dependencies (computeIfAbsent re-entry hazard — see
-    // prefixPostings)
-    val hs = shingleIndex(spark, dir)
-    prefixPostings(spark, dir)
     val version = s"t${(JaccardThreshold * 100).toInt}-cap$DocFreqCap-" +
       ShingleIndexVersion
     val idx = graft.Scratch.materialize(spark, "jaccard_pairs", version, dir)(
       staging =>
-        jaccardForCandidatesHs(hs, prefixIndexCandidates(spark, dir))
+        jaccardForCandidatesHs(shingleIndex(spark, dir), prefixIndexCandidates(spark, dir))
           .filter(col("jaccard_raw") >= JaccardThreshold)
           .select(col("da"), col("db"), col("jaccard"))
           .write.parquet(staging))

@@ -294,15 +294,10 @@ object Graph {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
   }
 
-  private[operators] def componentEdges(spark: SparkSession, dir: String): String = {
-    // pre-materialize the directed artifact OUTSIDE the closure
-    // (Scratch.materialize memoizes through computeIfAbsent — re-entrant
-    // builds deadlock; the d4/d6 discipline)
-    val lg = linkGraph(spark, dir)
+  private[operators] def componentEdges(spark: SparkSession, dir: String): String =
     graft.Scratch.materialize(spark, "component_edges",
       s"sym-$LinkGraphVersion", dir)(
-      staging => buildComponentEdges(spark, dir, lg, staging))
-  }
+      staging => buildComponentEdges(spark, dir, linkGraph(spark, dir), staging))
 
   def components(spark: SparkSession, dir: String): DataFrame = {
     val idx = componentEdges(spark, dir)
@@ -496,14 +491,10 @@ object Graph {
     orientedOf(() => graft.Catalog.read(spark, symIdx))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(out)
 
-  private[operators] def triangleEdges(spark: SparkSession, dir: String): String = {
-    // pre-materialize the symmetric artifact OUTSIDE the closure
-    // (computeIfAbsent re-entry — the d4/d6 discipline)
-    val sym = componentEdges(spark, dir)
+  private[operators] def triangleEdges(spark: SparkSession, dir: String): String =
     graft.Scratch.materialize(spark, "triangle_edges",
       s"orient-$LinkGraphVersion", dir)(
-      staging => buildTriangleEdges(spark, sym, staging))
-  }
+      staging => buildTriangleEdges(spark, componentEdges(spark, dir), staging))
 
   def triangleStats(spark: SparkSession, dir: String): DataFrame = {
     val sym = componentEdges(spark, dir)

@@ -1497,20 +1497,9 @@ object Profile {
 
   private def fdLevel1Indexed(spark: SparkSession, dir: String,
       table: String, cs: Seq[String]): DataFrame = {
-    // materialize the distinct artifact BEFORE entering this artifact's
-    // build lambda (the Dedup.prefixPostings rule): Scratch.materialize
-    // memoizes through computeIfAbsent, and a build that re-enters
-    // materialize updates the memo map from inside its own mapping
-    // function — ConcurrentHashMap throws "Recursive update" whenever the
-    // two dest keys share a bin (content-key-dependent, so it fired only
-    // on a cold scratch for some fixture generations — found by Smoke on
-    // fresh /tmp this round). Path-only: the DataFrame (a per-call
-    // listing/footer pass on the driver) is created inside the build
-    // lambda, so the steady state pays nothing for the hoist.
-    val dp = fdDistinctPath(spark, dir, table, cs)
     val p = graft.Scratch.materialize(spark, s"fd_l1_$table",
       FdLevel1Version + "-" + cs.mkString("_"), dir)(staging =>
-      fdDiscoveryOf(Seq((table, graft.Catalog.read(spark, dp), cs)))
+      fdDiscoveryOf(Seq((table, fdDistinctRelation(spark, dir, table, cs), cs)))
         .write.parquet(staging))
     graft.Catalog.read(spark, p)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
@@ -58,12 +58,15 @@ class DashboardSpec extends SparkSuite {
   }
 
   test("every index section is bounded by the serving cap") {
-    val cap = 7
-    val counts = Dashboard.collectIndexConcurrently(spark, sfDir, sectionCap = cap)
+    val cap = Dashboard.SectionCap
+    // the sf0.01 fixture, where every capped row set has more rows than the
+    // cap: 4,828 slow queries, 10,067 blocked sessions, 1,500 users, 3,385
+    // bands and bars
+    val sf001 = Paths.get(sfDir).resolveSibling("sf0.01").toString
+    val counts = Dashboard.collectIndexConcurrently(spark, sf001)
     counts.foreach { case (name, n) =>
-      assert(n <= math.max(cap, 20L), s"section $name returned $n rows")
+      assert(n <= cap, s"section $name returned $n rows")
     }
-    // row-set sections actually hit the cap (fixture has more rows than 7)
     assert(counts("slow_queries") == cap)
     assert(counts("blocked_sessions") == cap)
     assert(counts("users_roles") == cap)
@@ -91,14 +94,15 @@ class DashboardSpec extends SparkSuite {
   }
 
   test("latency-bands section serves w14's percentile relation, capped by its own order") {
-    val p = Dashboard.index(spark, sfDir, sectionCap = 5)
+    val cap = Dashboard.SectionCap
+    val p = Dashboard.index(spark, sfDir)
     val rows = p.latencyBands.collect()
-    assert(rows.length == 5, s"cap must bound the panel, got ${rows.length}")
+    assert(rows.length == cap, s"cap must bound the panel, got ${rows.length}")
     // same shape AND same leading rows as the registered w14 query — the
     // panel is a serving view over the gate-verified relation, not a fork
     assert(p.latencyBands.schema.fieldNames.toSeq ===
       Seq("event_type", "hour", "p50", "p95", "p99", "n"))
-    val w14 = operators.Monitoring.latencyBands(spark, sfDir).limit(5).collect()
+    val w14 = operators.Monitoring.latencyBands(spark, sfDir).limit(cap).collect()
     assert(rows.toSeq === w14.toSeq, "panel drifted from w14")
     rows.foreach { r =>
       val (p50, p95, p99) = (r.getDouble(2), r.getDouble(3), r.getDouble(4))
@@ -108,12 +112,13 @@ class DashboardSpec extends SparkSuite {
   }
 
   test("ohlc section serves w19's bar relation, capped by its own order") {
-    val p = Dashboard.index(spark, sfDir, sectionCap = 5)
+    val cap = Dashboard.SectionCap
+    val p = Dashboard.index(spark, sfDir)
     val rows = p.ohlcBars.collect()
-    assert(rows.length == 5)
+    assert(rows.length == cap)
     assert(p.ohlcBars.schema.fieldNames.toSeq ===
       Seq("event_type", "bucket", "open", "high", "low", "close", "n_events"))
-    val w19 = operators.Monitoring.ohlcBars(spark, sfDir).limit(5).collect()
+    val w19 = operators.Monitoring.ohlcBars(spark, sfDir).limit(cap).collect()
     assert(rows.toSeq === w19.toSeq, "panel drifted from w19")
     rows.foreach { r =>
       val (o, h, l, c) = (r.getDouble(2), r.getDouble(3), r.getDouble(4),
